@@ -166,8 +166,10 @@ def main() -> int:
             pass
     # Warmup may persist intermediates; the first TIMED query is that
     # same query and would reuse them — clear so query 1 starts from
-    # the same cold cache as every other.
+    # the same cold cache as every other, and free the warm-up's
+    # checkpoint blocks as every timed run's are.
     spark.catalog.clearCache()
+    release_checkpoints(spark)
 
     # accepted runs per query: list of (seconds, seq)
     runs: dict[str, list[tuple[float, int]]] = {}
@@ -368,7 +370,7 @@ def main() -> int:
         "failed": sorted(failed),
         "sf": sf,
     }
-    # Solo-rerun A/B book (tools/regression_ab.py) — embedded so the
+    # Solo-rerun A/B book (tools/ab.py regression_ab) — embedded so the
     # per-round BENCH_DETAIL snapshot carries the triage evidence.
     ab_path = REPO / "BENCH_AB.json"
     if ab_path.exists():

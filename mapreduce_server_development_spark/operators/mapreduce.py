@@ -29,7 +29,7 @@ Two grouping modes:
 
 - ``compat=True`` (default): byte-exact reference semantics — global
   lexicographic sort + distinct-line round-robin routing. Costs a
-  distinct + sort + join of the map output; use for golden parity.
+  count + sort of the distinct map-output lines; use for golden parity.
 - ``compat=False``: the 100 TB path — hash-partition on the tab-key
   with ONE shuffle (``repartitionAndSortWithinPartitions``); identical
   reduce results for key-based reducers (all shipped reference
@@ -44,6 +44,8 @@ exactly and parallelizes per file.
 
 from __future__ import annotations
 
+import itertools
+import operator
 import os
 import shlex
 import shutil
@@ -217,18 +219,37 @@ def _run_job_stages(
     compat: bool,
 ) -> list[str]:
     mapped = _pipe_per_file(sc, files, mapper_executable)
+    sorted_lines = group_stage(mapped, num_reducers, compat)
 
+    # F7: one reducer subprocess per reduce partition, sorted lines on
+    # stdin — partition i becomes outputfile(i+1).
+    reduced = sorted_lines.pipe(_cmd(reducer_executable), checkCode=True)
+
+    return _sink_numbered(reduced, output_directory)
+
+
+def group_stage(mapped: RDD, num_reducers: int, compat: bool = True) -> RDD:
+    """Group stage: map-output lines -> ``num_reducers`` partitions,
+    each sorted by ``line + "\\n"``; partition i feeds reducer i."""
     n = max(1, num_reducers)
     sort_key = _make_sort_key()
     if compat:
         # Global dense rank over distinct lines (sorted), then route
-        # line -> rank % n. distinct+sortBy+zipWithIndex are all
-        # distributed; the join re-attaches ranks to every copy.
-        ranks = mapped.distinct().sortBy(sort_key).zipWithIndex()
+        # line -> rank % n. Each distinct line is counted once and
+        # re-emitted count times, so the mapper output is evaluated
+        # ONCE: a second evaluation (a join back against the ranks)
+        # would re-run every mapper, and a non-deterministic mapper's
+        # lines would then match no rank and vanish silently.
         routed = (
-            mapped.map(lambda line: (line, None))
-            .join(ranks)
-            .map(lambda kv: ((kv[1][1] % n, kv[0] + "\n"), kv[0]))
+            mapped.map(lambda line: (line, 1))
+            .reduceByKey(operator.add)
+            .sortBy(lambda kv: sort_key(kv[0]))
+            .zipWithIndex()
+            .flatMap(
+                lambda kvr: itertools.repeat(
+                    ((kvr[1] % n, sort_key(kvr[0][0])), kvr[0][0]), kvr[0][1]
+                )
+            )
         )
     else:
         # One-shuffle path: hash the tab-separated key. Sorting by the
@@ -236,21 +257,14 @@ def _run_job_stages(
         # which is all a sort-contract reducer (`uniq -c`) needs.
         routed = mapped.map(
             lambda line: (
-                (portable_hash(line.split("\t", 1)[0]) % n, line + "\n"),
+                (portable_hash(line.split("\t", 1)[0]) % n, sort_key(line)),
                 line,
             )
         )
-
     grouped = routed.repartitionAndSortWithinPartitions(
         numPartitions=n, partitionFunc=lambda k: k[0]
     )
-    sorted_lines = grouped.map(lambda kv: kv[1], preservesPartitioning=True)
-
-    # F7: one reducer subprocess per reduce partition, sorted lines on
-    # stdin — partition i becomes outputfile(i+1).
-    reduced = sorted_lines.pipe(_cmd(reducer_executable), checkCode=True)
-
-    return _sink_numbered(reduced, output_directory)
+    return grouped.map(lambda kv: kv[1], preservesPartitioning=True)
 
 
 def _sink_numbered(rdd: RDD, output_directory: str) -> list[str]:

@@ -1765,10 +1765,9 @@ def q_value_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (frame/chunk_rows) and task count both stop mattering once chunks
     are >= 10x the frame depth. Default is 4000: equal wall-clock with
     4x fewer tasks and a 4x smaller carry copy than the old 1000.
-    Tunable via SPARK_GRAFT_ANOMALY_CHUNK_ROWS — on a real cluster
-    pick chunk_rows so rows/chunk_rows ~ 2-3x total cores (the usual
-    task-granularity rule); correctness is unaffected at any
-    chunk_rows >= 100 (the carry always covers the frame).
+    On a real cluster pick chunk_rows so rows/chunk_rows ~ 2-3x total
+    cores (the usual task-granularity rule); correctness is unaffected
+    at any chunk_rows >= 100 (the carry always covers the frame).
     """
     from ..functions.chunked import chunked_trailing_window
     from ..functions.prefix import global_row_number
@@ -1786,14 +1785,12 @@ def q_value_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.col("grn") - F.col("t0") + 1)
         .select("event_id", "event_type", "vdec", "rn")
     )
-    import os
-
     stats = chunked_trailing_window(
         seq,
         "event_type",
         "rn",
         frame=100,
-        chunk_rows=int(os.environ.get("SPARK_GRAFT_ANOMALY_CHUNK_ROWS", "4000")),
+        chunk_rows=4000,
         aggs=lambda w: [
             F.count("vdec").over(w).alias("n"),
             F.sum("vdec").over(w).alias("s1"),

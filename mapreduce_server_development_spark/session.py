@@ -42,12 +42,10 @@ def state_store_confs() -> dict[str, str]:
     }
 
 
-def get_spark(
-    app_name: str = "mapreduce-server-development-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
+def spark_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The engine's session config, as a dict: ``get_spark`` builds
+    from it, and the tools apply their overrides on top of it, so
+    there is one copy of the config.
 
     - ``spark.sql.session.timeZone=UTC``: the oracle (DuckDB) uses
       UTC-naive timestamps; pinning UTC makes timestamp semantics match.
@@ -57,13 +55,11 @@ def get_spark(
       AQE coalesces from a higher initial number anyway.
     """
     cores = _default_parallelism()
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or max(cores, 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # AQE coalesce floor (default 1m). At small per-stage data the
         # engine's compute-dense aggregates (SimHash's 64-vote agg, the
         # CF pair agg, anomaly scoring) compress to well under 1 MB of
@@ -80,25 +76,36 @@ def get_spark(
         # there). On a cluster real partitions sit far above either
         # floor, so the setting is inert at 100 TB; env-overridable for
         # deployments that want the stock 1m.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.driver.maxResultSize", "2g")
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
+            "SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"
+        ),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+        "spark.driver.maxResultSize": "2g",
         # Local mode runs the whole engine in the driver JVM; the 1g
         # default heap GC-thrashes once ~32 shuffle tasks run hot.
         # Upper bound, not an allocation; on a cluster use
         # executor-memory sizing instead.
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        )
-        .config("spark.ui.enabled", "false")
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        **state_store_confs(),
+    }
+
+
+def get_spark(
+    app_name: str = "mapreduce-server-development-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    overrides: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) the engine's SparkSession from ``spark_confs``,
+    with ``overrides`` (an A/B arm's config) applied on top."""
+    builder = SparkSession.builder.appName(app_name).master(
+        master or f"local[{_default_parallelism()}]"
     )
-    for k, v in state_store_confs().items():
+    for k, v in {**spark_confs(shuffle_partitions), **(overrides or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if os.environ.get("SPARK_GRAFT_WARMUP", "") == "1":

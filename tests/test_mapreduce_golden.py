@@ -8,6 +8,7 @@ Byte-exact comparison against the reference's own correct/*.txt files
 from __future__ import annotations
 
 import filecmp
+from pathlib import Path
 
 import pytest
 
@@ -157,26 +158,78 @@ def test_group_stage_round_robin_splits(spark):
     if not src.exists():
         pytest.skip("manager_08 fixtures not present")
 
+    from mapreduce_server_development_spark.operators.mapreduce import group_stage
+
     sc = spark.sparkContext
     files = sorted(str(p) for p in src.glob("file*"))
     mapped = sc.union([sc.textFile(f, 1).coalesce(1) for f in files])
-
-    def sort_key(line):
-        return line + "\n"
-
-    n = 2
-    ranks = mapped.distinct().sortBy(sort_key).zipWithIndex()
-    grouped = (
-        mapped.map(lambda line: (line, None))
-        .join(ranks)
-        .map(lambda kv: ((kv[1][1] % n, sort_key(kv[0])), kv[0]))
-        .repartitionAndSortWithinPartitions(numPartitions=n, partitionFunc=lambda k: k[0])
-    )
-    parts = grouped.map(lambda kv: kv[1], preservesPartitioning=True).glom().collect()
+    parts = group_stage(mapped, 2).glom().collect()
     for i, name in enumerate(["reduce01", "reduce02"]):
         with open(golden_dir / name, encoding="utf-8") as f:
             golden = f.read()
         assert "".join(line + "\n" for line in parts[i]) == golden, name
+
+
+def test_nondeterministic_mapper_loses_no_lines(spark, tmp_path):
+    """The group stage evaluates the map output once: a mapper that
+    emits a fresh random key per input line still gets every line
+    through to the reducer. (Evaluating the mapper twice — once to
+    rank the distinct lines, once to route them — would rank one run's
+    keys and route another's, and every line would vanish.)"""
+    import sys
+
+    from mapreduce_server_development_spark.operators import run_job
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    for i in range(4):
+        (indir / f"part{i}.txt").write_text(
+            "".join(f"line {i} {j}\n" for j in range(250))
+        )
+    mapper = tmp_path / "uuid_map.py"
+    mapper.write_text(
+        "import sys, uuid\n"
+        "for _ in sys.stdin:\n"
+        "    print(uuid.uuid4().hex + '\\t1')\n"
+    )
+    outs = run_job(
+        spark, str(indir), str(tmp_path / "out"),
+        [sys.executable, str(mapper)], "cat", 2, 2,
+    )
+    n_out = sum(len(Path(o).read_text(encoding="utf-8").splitlines()) for o in outs)
+    assert n_out == 1000
+
+
+def test_group_contract_round_robin_model(spark, tmp_path):
+    """``cat`` mapper and reducer over 3 reducers: each output file is
+    the plain-Python model of the reference group stage — distinct
+    lines sorted by ``line + "\\n"`` (so ``"a\\tb"`` sorts before
+    ``"a"``), the line ranked k routed to file ``k % 3``, every copy of
+    a line kept, each file sorted."""
+    from mapreduce_server_development_spark.operators import run_job
+
+    files = {
+        "f1.txt": ["a", "a\tb", "c\t1", "b", "a", "a b", "c\t1"],
+        "f2.txt": ["a\tb", "ab", "a\ta", "b\t2", "c\t1", "b", "zz"],
+    }
+    indir = tmp_path / "in"
+    indir.mkdir()
+    for name, lines in files.items():
+        (indir / name).write_text("".join(line + "\n" for line in lines))
+    n = 3
+    outs = run_job(spark, str(indir), str(tmp_path / "out"), "cat", "cat", 2, n)
+
+    def key(line):
+        return line + "\n"
+
+    lines = [line for ls in files.values() for line in ls]
+    rank = {line: k for k, line in enumerate(sorted(set(lines), key=key))}
+    assert rank["a\tb"] < rank["a"]
+    expected = [
+        "".join(key(line) for line in sorted(lines, key=key) if rank[line] % n == i)
+        for i in range(n)
+    ]
+    assert [Path(o).read_text(encoding="utf-8") for o in outs] == expected
 
 
 def test_round_robin_partition():
@@ -398,8 +451,6 @@ def test_input_files_with_hadoop_metachars(spark, tmp_path):
         str(EXEC / "wc_reduce.sh"),
         num_reducers=1,
     )
-    from pathlib import Path
-
     text = Path(outs[0]).read_text()
     counts = dict(
         line.split("\t") for line in text.strip().split("\n") if line

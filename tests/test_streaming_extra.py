@@ -103,8 +103,9 @@ def test_rocksdb_provider_output_invariance(spark):
     provider as under the default HDFS-backed one. The RocksDB arm
     runs in a fresh subprocess because the provider class is a
     session-builder conf (SPARK_GRAFT_STATE_STORE env gate); the
-    default arm reuses this session. Scale twin: tools/rocksdb_ab.py
-    runs the same assertion at x10 state volume."""
+    default arm reuses this session. Scale twin: ``tools/ab.py
+    rocksdb_state_store_ab`` makes the same result-digest check across
+    fresh-process arms on any fixture."""
     import os
     import subprocess
     import sys

@@ -20,9 +20,11 @@ Layers, per query:
                   window; tests/test_no_antipatterns.py).
 - ``test:<file>`` named in a targeted test module (replays,
                   invariants, goldens, multi-batch streaming splits).
-- ``stress``      named in a scale-stress tool (tools/stress_*.py,
-                  tools/ann_clustered_recall.py, tools/xs_recall.py).
-- ``ab``          named in a BENCH_AB.json A/B or attribution entry.
+- ``stress``      in a scale-stress family (tools/stress.py FAMILIES)
+                  or named in tools/ann_clustered_recall.py or
+                  tools/xs_recall.py.
+- ``ab``          in a tools/ab.py experiment, or named in a
+                  BENCH_AB.json A/B or attribution entry.
 """
 
 from __future__ import annotations
@@ -53,20 +55,29 @@ def first_sentence(doc: str | None) -> str:
     return text[:200]
 
 
-def _scan_sources() -> tuple[dict[str, str], dict[str, str], str]:
+def _scan_sources() -> tuple[dict[str, str], str, str]:
+    """Targeted tests by file, then the text the ``stress`` and the
+    ``ab`` layers are matched against."""
+    sys.path.insert(0, str(REPO / "tools"))
+    from ab import EXPERIMENTS
+    from stress import FAMILIES
+
     tests = {
         p.name: p.read_text()
         for p in sorted((REPO / "tests").glob("test_*.py"))
         if p.name not in _BLANKET_TESTS
     }
-    tools = {
-        p.name: p.read_text()
-        for p in sorted((REPO / "tools").glob("*.py"))
-        if p.name.startswith(("stress_", "ann_", "xs_", "ab_", "warmup_"))
-    }
+    stress_text = "\n".join(
+        [q for fam in FAMILIES.values() for q in fam.queries]
+        + [(REPO / "tools" / f).read_text()
+           for f in ("ann_clustered_recall.py", "xs_recall.py")]
+    )
     ab_path = REPO / "BENCH_AB.json"
-    ab_text = ab_path.read_text() if ab_path.exists() else ""
-    return tests, tools, ab_text
+    ab_text = "\n".join(
+        [q for _, queries in EXPERIMENTS.values() for q in queries]
+        + [ab_path.read_text() if ab_path.exists() else ""]
+    )
+    return tests, stress_text, ab_text
 
 
 def layers_of(
@@ -74,7 +85,7 @@ def layers_of(
     oracles: dict,
     gate_skip: set[str],
     tests: dict[str, str],
-    tools: dict[str, str],
+    stress_text: str,
     ab_text: str,
 ) -> str:
     word = re.compile(rf"\b{re.escape(name)}\b")
@@ -84,7 +95,7 @@ def layers_of(
     hits = [f.removeprefix("test_").removesuffix(".py")
             for f, src in tests.items() if word.search(src)]
     out.extend(f"test:{h}" for h in hits)
-    if any(word.search(src) for src in tools.values()):
+    if word.search(stress_text):
         out.append("stress")
     if word.search(ab_text):
         out.append("ab")
@@ -96,7 +107,7 @@ def main() -> None:
     oracles = entry.oracle_sql()
     from tests.test_no_antipatterns import SKIP as gate_skip
 
-    tests, tools, ab_text = _scan_sources()
+    tests, stress_text, ab_text = _scan_sources()
     by_module: dict[str, list[str]] = {}
     for name, fn in queries.items():
         by_module.setdefault(fn.__module__.split(".")[-1], []).append(name)
@@ -123,7 +134,7 @@ def main() -> None:
     for mod in sorted(by_module):
         lines = []
         for n in sorted(by_module[mod]):
-            lay = layers_of(n, oracles, set(gate_skip), tests, tools, ab_text)
+            lay = layers_of(n, oracles, set(gate_skip), tests, stress_text, ab_text)
             if "test:" in lay or "stress" in lay or "ab" in lay:
                 n_targeted += 1
             lines.append(
