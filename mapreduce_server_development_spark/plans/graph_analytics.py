@@ -28,8 +28,9 @@ lines, SURVEY.md §1.2); all three are public-knowledge algorithms:
 Scale posture (the 100 TB story, per family):
 
 - LPA: each round is one neighbor-keyed equi-join plus two
-  partial-agg'd shuffles; rounds are FIXED (4) and each round's label
-  relation is localCheckpoint()ed so lineage stays O(1). The argmax
+  partial-agg'd shuffles; rounds are FIXED (4) and every second
+  round's label relation is localCheckpoint()ed so lineage stays O(1)
+  (``functions/graph.lpa_labels``). The argmax
   is ``max(struct(count, -label))`` — a partial-aggregable exact-
   integer agg, never a per-vertex sort or window.
 - RA link prediction: the wedge join through z is quadratic in
@@ -51,15 +52,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.graph import (
+    bfs_levels,
+    degrees,
+    lpa_labels,
+    sym_edges,
+    triangles_per_vertex,
+)
 from ..sources.tables import load_table
-from .graph_common import capped_po, po_sql
+from .graph_common import copurchase_edges, po_sql
 from .registry import query
 
 # ---------------------------------------------------------------------------
-# Shared co-purchase edge relation (same construction as q_triangle_count:
-# parts linked when some order contains both).  Whale baskets are
-# excluded via graph_common.ORDER_BASKET_CAP, identically in both
-# engines (see graph_common.py).
+# Oracle text of the shared co-purchase edge relation
+# (graph_common.copurchase_edges: parts linked when some order contains
+# both).  Whale baskets are excluded via graph_common.ORDER_BASKET_CAP,
+# identically in both engines (see graph_common.py).
 # ---------------------------------------------------------------------------
 
 def _edges_sql(min_support: int = 1) -> str:
@@ -75,36 +83,6 @@ def _edges_sql(min_support: int = 1) -> str:
     ),
     sym AS (SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e)
 """
-
-
-def _copurchase_edges(
-    spark: SparkSession, sf_dir: str, min_support: int = 1
-) -> DataFrame:
-    """Distinct undirected co-purchase edges (a < b) with optional
-    support threshold, checkpointed so both directions / degree / join
-    consumers reuse one physical scan.  Whale baskets (orders with
-    > ORDER_BASKET_CAP distinct parts) are excluded before the pair
-    self-join — see graph_common.py.
-    """
-    po = capped_po(spark, sf_dir)
-    return (
-        po.alias("x")
-        .join(po.alias("y"), "l_orderkey")
-        .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
-        .groupBy(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .agg(F.count("*").alias("sup"))
-        .filter(F.col("sup") >= min_support)
-        .select("a", "b")
-        .localCheckpoint(eager=True)
-    )
-
-
-def _sym(e: DataFrame) -> DataFrame:
-    return e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -160,44 +138,15 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup) + a (v, lbl)-keyed partial-agg count + a v-keyed
     ``max(struct(c, -lbl))`` argmax — all hash-partitioned on
     high-cardinality vertex keys; no windows, no per-vertex sort, no
-    driver data. Rounds fixed at 4; labels localCheckpoint()ed
-    per round so the plan never grows. The sync + deterministic
+    driver data. Rounds fixed at 4 (``functions/graph.lpa_labels``);
+    labels localCheckpoint()ed every second round so the plan never
+    grows. The sync + deterministic
     tie-break variant is what makes the fixpoint a pure relation
     function (and hence DuckDB-oracle-checkable).
     """
-    e = _copurchase_edges(spark, sf_dir, min_support=2)
-    sym = _sym(e)
-    labels = sym.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("lbl")
+    labels = lpa_labels(
+        sym_edges(copurchase_edges(spark, sf_dir, min_support=2)), _LPA_ROUNDS
     )
-    for rnd in range(1, _LPA_ROUNDS + 1):
-        nbr_votes = (
-            sym.join(labels.withColumnRenamed("v", "dst"), "dst")
-            .select(F.col("src").alias("v"), "lbl")
-            .groupBy("v", "lbl")
-            .agg(F.count("*").alias("c"))
-        )
-        votes = nbr_votes.unionAll(
-            labels.select("v", "lbl", F.lit(1).cast("long").alias("c"))
-        )
-        counts = votes.groupBy("v", "lbl").agg(F.sum("c").alias("c"))
-        labels = (
-            counts.groupBy("v")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("c").alias("c"), (-F.col("lbl")).alias("nl")
-                    )
-                ).alias("m")
-            )
-            .select("v", (-F.col("m.nl")).alias("lbl"))
-        )
-        # Checkpoint every SECOND round: lineage stays O(1) but the
-        # per-round materialization barrier (the dominant fixed cost —
-        # an eager job per round) is halved. A/B at sf0.01: 14.0s
-        # every-round -> see STATUS for the measured delta.
-        if rnd % 2 == 0:
-            labels = labels.localCheckpoint(eager=True)
     fin = labels.groupBy("lbl").agg(F.count("*").cast("long").alias("size"))
     tot = fin.agg(F.count("*").cast("long").alias("n_communities"))
     return (
@@ -258,11 +207,9 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so cross-engine ranking ties are impossible except on
     true ties, which the (part_a, part_b) tie-break resolves.
     """
-    e = _copurchase_edges(spark, sf_dir)
-    sym = _sym(e)
-    deg = sym.groupBy(F.col("src").alias("z")).agg(
-        F.count("*").cast("long").alias("d")
-    )
+    e = copurchase_edges(spark, sf_dir)
+    sym = sym_edges(e)
+    deg = degrees(e).withColumnRenamed("x", "z")
     mid = (
         sym.join(deg, sym["src"] == deg["z"])
         .filter((F.col("d") >= 2) & (F.col("d") <= _RA_DEG_CAP))
@@ -761,8 +708,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     are one partial-agg'd shuffle on the node key and the histogram
     collapses to ≤ ~40 buckets.
     """
-    e = _copurchase_edges(spark, sf_dir, 1)
-    deg = _sym(e).groupBy("src").agg(F.count("*").cast("long").alias("d"))
+    deg = degrees(copurchase_edges(spark, sf_dir))
     return (
         deg.selectExpr("length(bin(d)) - 1 AS bucket", "d")
         .groupBy("bucket")
@@ -871,13 +817,11 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: degree-oriented triangle join (the proven q_triangle_count
     engine) + one nodes-scale left join + a four-counter rollup.
     """
-    from ..functions.graph import triangles_per_vertex
-
-    e = _copurchase_edges(spark, sf_dir, 2)
-    deg = _sym(e).groupBy("src").agg(F.count("*").cast("long").alias("d"))
-    tc = triangles_per_vertex(e.select("a", "b"))
+    e = copurchase_edges(spark, sf_dir, 2)
+    deg = degrees(e)
+    tc = triangles_per_vertex(e)
     node = (
-        deg.join(tc, deg.src == tc.x, "left")
+        deg.join(tc, "x", "left")
         .filter(F.col("d") >= 2)
         .select("d", F.coalesce(F.col("t"), F.lit(0)).alias("t"))
     )
@@ -946,17 +890,17 @@ def q_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommendation walk need".
 
     All seeds traverse in ONE frontier relation keyed by (seed,
-    node): each hop is an edge equi-join + anti-join against the
-    visited set (first-discovery = min-hop, matching the oracle's
-    recursive-CTE MIN), checkpointed per hop so lineage stays flat.
+    node) (``functions/graph.bfs_levels``): each hop is an edge
+    equi-join + anti-join against the visited set (first-discovery =
+    min-hop, matching the oracle's recursive-CTE MIN), checkpointed per
+    hop so lineage stays flat.
     The hop cap bounds iteration; eccentricities at the cap are
     reported as capped (honest truncation, same in both engines).
 
     Scale: |seeds|× the q_copurchase_bfs cost — key-partitioned
     joins only; nothing global, no windows.
     """
-    e = _copurchase_edges(spark, sf_dir, 2)
-    sym = _sym(e).localCheckpoint(eager=True)
+    sym = sym_edges(copurchase_edges(spark, sf_dir, 2)).localCheckpoint(eager=True)
     seeds = (
         sym.select("src")
         .distinct()
@@ -967,25 +911,14 @@ def q_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_ECC_SEEDS)
         .select(F.col("src").alias("seed"))
     )
-    visited = seeds.select(
-        "seed", F.col("seed").alias("part"), F.lit(0).alias("hop")
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("seed", "part")
+    levels = bfs_levels(sym, seeds, _ECC_HOPS)
+    visited = levels[0].select("seed", "v", F.lit(0).alias("hop"))
     for hop in range(1, _ECC_HOPS + 1):
-        nxt = (
-            frontier.join(sym, frontier["part"] == sym["src"])
-            .select("seed", F.col("dst").alias("part"))
-            .distinct()
-            .join(visited.select("seed", "part"), ["seed", "part"], "left_anti")
-            .select("seed", "part", F.lit(hop).alias("hop"))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.union(nxt)
-        frontier = nxt.select("seed", "part")
+        visited = visited.union(levels[hop].select("seed", "v", F.lit(hop)))
     out = visited.groupBy("seed").agg(
         F.max("hop").alias("ecc"),
         F.count("*").alias("n_reached"),
-        F.sum("part").alias("checksum"),
+        F.sum("v").alias("checksum"),
     )
     return out.selectExpr(*_ECC_FINAL).orderBy("seed")
 
@@ -1058,35 +991,9 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the LPA rounds (vertex-keyed joins, checkpointed) + two
     community-keyed aggregates + a community-sized rollup.
     """
-    e = _copurchase_edges(spark, sf_dir, min_support=2)
-    sym = _sym(e)
-    labels = sym.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("lbl")
-    )
-    for rnd in range(1, _LPA_ROUNDS + 1):
-        nbr_votes = (
-            sym.join(labels.withColumnRenamed("v", "dst"), "dst")
-            .select(F.col("src").alias("v"), "lbl")
-            .groupBy("v", "lbl")
-            .agg(F.count("*").alias("c"))
-        )
-        votes = nbr_votes.unionAll(
-            labels.select("v", "lbl", F.lit(1).cast("long").alias("c"))
-        )
-        counts = votes.groupBy("v", "lbl").agg(F.sum("c").alias("c"))
-        labels = (
-            counts.groupBy("v")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("c").alias("c"), (-F.col("lbl")).alias("nl")
-                    )
-                ).alias("m")
-            )
-            .select("v", (-F.col("m.nl")).alias("lbl"))
-        )
-        if rnd % 2 == 0:
-            labels = labels.localCheckpoint(eager=True)
+    e = copurchase_edges(spark, sf_dir, min_support=2)
+    sym = sym_edges(e)
+    labels = lpa_labels(sym, _LPA_ROUNDS)
     m = e.agg(F.count("*").cast("long").alias("m"))
     la = labels.selectExpr("v AS a", "lbl AS la_lbl")
     lb = labels.selectExpr("v AS b", "lbl AS lb_lbl")
@@ -1358,8 +1265,7 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bounded predecessor relations in reverse. No window, no
     collect, no all-pairs anything.
     """
-    e = _copurchase_edges(spark, sf_dir, 1)
-    sym = _sym(e).localCheckpoint(eager=True)
+    sym = sym_edges(copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
     seeds = (
         sym.select("src")
         .distinct()
@@ -1370,32 +1276,15 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_BC_SEEDS)
         .select(F.col("src").alias("seed"))
     )
-    levels = [
-        seeds.select(
-            "seed",
-            F.col("seed").alias("v"),
-            F.lit(1).cast("decimal(38,0)").alias("sig"),
-        ).localCheckpoint(eager=True)
-    ]
+    levels = bfs_levels(sym, seeds, _BC_HOPS)
     preds = {}
-    visited = levels[0].select("seed", "v")
     for r in range(1, _BC_HOPS + 1):
-        prev = levels[r - 1]
-        cand = (
-            prev.join(sym, prev["v"] == sym["src"])
-            .groupBy("seed", F.col("dst").alias("nv"))
-            .agg(F.sum("sig").alias("sig"))
-            .withColumnRenamed("nv", "v")
-        )
-        new = (
-            cand.join(visited, ["seed", "v"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
         preds[r] = (
-            prev.select("seed", F.col("v").alias("p"), F.col("sig").alias("sig_p"))
+            levels[r - 1]
+            .select("seed", F.col("v").alias("p"), F.col("sig").alias("sig_p"))
             .join(sym, F.col("p") == sym["src"])
             .join(
-                new.select(
+                levels[r].select(
                     F.col("seed").alias("nseed"),
                     F.col("v"),
                     F.col("sig").alias("sig_v"),
@@ -1404,8 +1293,6 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("seed", "p", "sig_p", "v", "sig_v")
         )
-        levels.append(new)
-        visited = visited.union(new.select("seed", "v"))
     term_leaf = F.expr(
         "CAST(sig_p AS DECIMAL(38,0)) * 1000000000 DIV sig_v"
     )

@@ -1,9 +1,10 @@
-"""Shared co-purchase basket relation with a whale-basket cap.
+"""Shared co-purchase edge relation with a whale-basket cap.
 
 Every graph-family query (triangles, k-core, LPA, modularity,
 clustering coefficient, eccentricity, link prediction, assortativity,
-degree distribution, BFS) derives its edges from the same order-keyed
-self-join over ``po = DISTINCT (l_orderkey, l_partkey)``.  Per-order
+degree distribution, BFS, betweenness) derives its edges from
+:func:`copurchase_edges`: the one order-keyed self-join over
+``po = DISTINCT (l_orderkey, l_partkey)``.  Per-order
 pair fan-out is C(|basket|, 2): quadratic in the largest basket.  On
 the TPC-H-ish fixtures this is schema-bounded (<= 7 lineitems/order ->
 <= 21 pairs), but a skewed production basket distribution would
@@ -75,4 +76,29 @@ def capped_po(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("basket_n") <= ORDER_BASKET_CAP)
         .drop("basket_n")
+    )
+
+
+def copurchase_edges(
+    spark: SparkSession, sf_dir: str, min_support: int = 1
+) -> DataFrame:
+    """Distinct undirected co-purchase edges ``(a, b)``, a < b: parts
+    bought together in at least ``min_support`` capped orders.
+
+    Checkpointed eagerly, so the symmetric edges, the degrees and the
+    per-round joins of every consumer reuse one physical pair join
+    instead of re-running it per reference.
+    """
+    po = capped_po(spark, sf_dir)
+    return (
+        po.alias("x")
+        .join(po.alias("y"), "l_orderkey")
+        .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
+        .groupBy(
+            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
+        )
+        .agg(F.count("*").alias("sup"))
+        .filter(F.col("sup") >= min_support)
+        .select("a", "b")
+        .localCheckpoint(eager=True)
     )

@@ -1603,7 +1603,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ngram_jaccard_pairs(docs, n=5, threshold=0.2, max_doc_freq=1000)
     edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     nodes = docs.select(F.col("doc_id").alias("node"))
-    return pagerank_micro(nodes, edges, iters=10, damping_pct=85).select(
+    return pagerank_micro(nodes, edges, iters=10).select(
         F.col("node").alias("doc_id"), "rank_micro"
     )
 
@@ -1662,9 +1662,9 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled). Teleport mass returns ONLY to the seeds, so untouched
     components stay at exactly 0 and are dropped from the output
     (PPR's defining sparsity). Integer micro-unit arithmetic
-    end-to-end (``functions/graph.py personalized_pagerank_micro``);
-    the oracle unrolls all 8 rounds bit-exactly."""
-    from ..functions.graph import personalized_pagerank_micro
+    end-to-end (``functions/graph.py pagerank_micro`` with a seed
+    column); the oracle unrolls all 8 rounds bit-exactly."""
+    from ..functions.graph import pagerank_micro
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, n=5, threshold=0.2, max_doc_freq=1000)
@@ -1674,9 +1674,11 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") <= _PPR_SEED_MAX_ID).cast("int").alias("is_seed"),
     )
     return (
-        personalized_pagerank_micro(nodes, edges, iters=8, damping_pct=85)
-        .filter(F.col("ppr_micro") > 0)
-        .select(F.col("node").alias("doc_id"), "ppr_micro")
+        pagerank_micro(nodes, edges, iters=8, seed_col="is_seed")
+        .filter(F.col("rank_micro") > 0)
+        .select(
+            F.col("node").alias("doc_id"), F.col("rank_micro").alias("ppr_micro")
+        )
         .orderBy("doc_id")
     )
 

@@ -19,8 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.graph import bfs_levels, count_triangles, degrees, sym_edges
 from ..sources.tables import load_table
-from .graph_common import capped_po, po_sql
+from .graph_common import capped_po, copurchase_edges, po_sql
 from .registry import query
 
 from .money import DEC, _dec, _rev  # noqa: F401 - shared money idiom
@@ -2314,42 +2315,14 @@ def q_copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edges come from an order-keyed self-join with the shared
     whale-basket cap (graph_common.ORDER_BASKET_CAP bounds per-order
     fan-out at C(256,2) regardless of skew), each hop is two
-    key-partitioned joins, and the hop bound caps the iteration — at
-    larger graphs add localCheckpoint per hop exactly as
-    connected_components does (SCALE.md).
+    key-partitioned joins (``functions/graph.bfs_levels``, which
+    checkpoints every hop), and the hop bound caps the iteration.
     """
-    po = capped_po(spark, sf_dir)
-    # Eager localCheckpoint (the functions/graph.py convention): each
-    # hop's frontier feeds two downstream joins and the next round —
-    # truncating lineage stops the per-hop DAG from re-deriving the
-    # edge self-join hop-times over.
-    edges = (
-        po.alias("a")
-        .join(po.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    seed = po.agg(F.min("l_partkey").alias("part"))
-    visited = seed.select("part", F.lit(0).alias("hop")).localCheckpoint(
-        eager=True
-    )
-    frontier = visited.select("part")
+    seeds = capped_po(spark, sf_dir).agg(F.min("l_partkey").alias("seed"))
+    levels = bfs_levels(sym_edges(copurchase_edges(spark, sf_dir)), seeds, 3)
+    visited = levels[0].select(F.col("v").alias("part"), F.lit(0).alias("hop"))
     for hop in range(1, 4):
-        nxt = (
-            frontier.join(edges, frontier["part"] == edges["src"])
-            .select(F.col("dst").alias("part"))
-            .distinct()
-            .join(visited.select("part"), "part", "left_anti")
-            .select("part", F.lit(hop).alias("hop"))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.union(nxt)
-        frontier = nxt.select("part")
+        visited = visited.union(levels[hop].select("v", F.lit(hop)))
     out = (
         visited.groupBy("hop")
         .agg(
@@ -2898,23 +2871,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg'd counts; transitivity = 3*triangles / wedges stays in
     exact integers (e6 floor-div).
     """
-    from ..functions.graph import count_triangles
-
-    po = capped_po(spark, sf_dir)
-    e = (
-        po.alias("a")
-        .join(po.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("a"), F.col("b.l_partkey").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = e.select(F.col("a").alias("x")).unionAll(e.select(F.col("b").alias("x")))
-    deg = sym.groupBy("x").agg(F.count("*").alias("d"))
+    e = copurchase_edges(spark, sf_dir)
     tri = count_triangles(e)
-    s = deg.agg(
+    s = degrees(e).agg(
         F.count("*").cast("long").alias("n_nodes"),
         F.sum(F.expr("d * (d - 1) DIV 2")).cast("long").alias("wedges"),
     )
@@ -3005,31 +2964,11 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds of the identical peel as CTEs; the fixpoint makes the extra
     rounds no-ops, so both engines agree exactly.
     """
-    po = capped_po(spark, sf_dir)
-    e = (
-        po.alias("x")
-        .join(po.alias("y"), "l_orderkey")
-        .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
-        .groupBy(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .agg(F.count("*").alias("sup"))
-        .filter(F.col("sup") >= 2)
-        .select("a", "b")
-        .localCheckpoint(eager=True)
-    )
+    e = copurchase_edges(spark, sf_dir, 2)
     n_edges = e.count()
     converged = False
     for _ in range(_KCORE_ORACLE_ROUNDS):
-        sym = e.select(F.col("a").alias("x")).unionAll(
-            e.select(F.col("b").alias("x"))
-        )
-        keep = (
-            sym.groupBy("x")
-            .agg(F.count("*").alias("d"))
-            .filter(F.col("d") >= _KCORE_K)
-            .select("x")
-        )
+        keep = degrees(e).filter(F.col("d") >= _KCORE_K).select("x")
         e = (
             e.join(keep.select(F.col("x").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("x").alias("b")), "b", "left_semi")
@@ -3126,25 +3065,8 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined sum pass — no quadratic step anywhere (whale
     baskets capped by graph_common.ORDER_BASKET_CAP).
     """
-    po = capped_po(spark, sf_dir)
-    # Checkpointed like its graph siblings (q_triangle_count, q_kcore):
-    # e feeds deg's symmetric union AND the two end-degree joins AND the
-    # doubled `ends` union — uncheckpointed, the order-keyed self-join
-    # would re-execute ~6x.
-    e = (
-        po.alias("x")
-        .join(po.alias("y"), "l_orderkey")
-        .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = e.select(F.col("a").alias("x")).unionAll(
-        e.select(F.col("b").alias("x"))
-    )
-    deg = sym.groupBy("x").agg(F.count("*").cast("long").alias("d"))
+    e = copurchase_edges(spark, sf_dir)
+    deg = degrees(e)
     joined = e.join(
         deg.select(F.col("x").alias("a"), F.col("d").alias("da")), "a"
     ).join(deg.select(F.col("x").alias("b"), F.col("d").alias("db")), "b")

@@ -47,34 +47,6 @@ from .registry import query
 
 _ROUNDS = 6
 
-#: One-outstanding persist GC (same pattern as the streaming sink GC):
-#: each invocation persists one vocab-scale DataFrame per merge round
-#: (a measured 3.6x win — the state is consumed by both the next pair
-#: count and the next fold); they cannot be unpersisted at return time
-#: (the returned plan still reads them), so the NEXT invocation of the
-#: SAME query releases the previous one's. The ledger is keyed by
-#: query name (q_bpe_train must not evict q_bpe_encode's live,
-#: possibly not-yet-collected state) and lock-guarded for concurrent
-#: invocation (the round-7 review flagged the shared-list form).
-_prev_persists: dict[str, list[DataFrame]] = {}
-_persists_lock = __import__("threading").Lock()
-
-
-def _gc_previous_persists(key: str) -> None:
-    with _persists_lock:
-        stale = _prev_persists.pop(key, [])
-    while stale:
-        try:
-            stale.pop().unpersist()
-        except Exception:  # noqa: BLE001 - best-effort GC
-            pass
-
-
-def _record_persists(key: str, frames: list[DataFrame]) -> None:
-    with _persists_lock:
-        _prev_persists.setdefault(key, []).extend(frames)
-
-
 def _word_state(docs: DataFrame) -> DataFrame:
     """(word, cnt, seq): the vocabulary-scale training state; seq is
     the space-joined character sequence with a leading space and the
@@ -113,14 +85,11 @@ def _greedy_merge_fold() -> Column:
 
 
 def _merge_rounds(
-    w: DataFrame, persist_key: str, rounds: int = _ROUNDS
+    w: DataFrame, rounds: int = _ROUNDS
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Run ``rounds`` BPE merge rounds on the word state; returns the
-    final state and the per-round 1-row winner DataFrames. The
-    per-round persists are recorded under ``persist_key`` so the next
-    invocation of the SAME query (and only it) releases them."""
+    final state and the per-round 1-row winner DataFrames."""
     merges: list[DataFrame] = []
-    persisted: list[DataFrame] = []
     for r in range(1, rounds + 1):
         pairs = w.select("cnt", F.explode(word_shingles(_syms(), 2)).alias("pair"))
         top = (
@@ -148,18 +117,9 @@ def _merge_rounds(
         # (q_tokenizer_fertility 2.6s -> 7-13.7s, recompute
         # compounding), while the checkpoint materializes each
         # vocab-scale round exactly once and truncates the lineage.
-        # The _record_persists/_gc bookkeeping below stays load-bearing
-        # for block RELEASE: the next invocation of the same query
-        # unpersists the previous one's checkpoint blocks (and
-        # session.release_checkpoints drops them session-wide between
-        # queries). Hazard, by design: unpersisting a lineage-truncated
-        # checkpoint destroys its only data copy, so a RETAINED frame
-        # from a previous invocation must never be re-executed after
-        # the GC ran — it fails hard with "checkpoint block not found"
-        # rather than silently recomputing (r11 ADVICE tokenizer:152).
+        # Its blocks are RDD-level: DataFrame.unpersist() does not free
+        # them; session.release_checkpoints does, between queries.
         w = w.localCheckpoint(eager=True)
-        persisted.append(w)
-    _record_persists(persist_key, persisted)
     return w, merges
 
 
@@ -239,9 +199,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale argument (training runs on the Zipf-bounded word table,
     each round a pair-count aggregate + 1-row broadcast greedy fold,
     all in one lazy plan)."""
-    _gc_previous_persists("q_bpe_train")
     docs = load_table(spark, sf_dir, "documents")
-    _, merges = _merge_rounds(_word_state(docs), "q_bpe_train")
+    _, merges = _merge_rounds(_word_state(docs))
     out = merges[0]
     for m in merges[1:]:
         out = out.unionAll(m)
@@ -292,9 +251,8 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-scale trick as training. The merge loop is the SAME
     helper q_bpe_train runs (one implementation to fix, not two).
     """
-    _gc_previous_persists("q_bpe_encode")
     docs = load_table(spark, sf_dir, "documents")
-    w, _ = _merge_rounds(_word_state(docs), "q_bpe_encode")
+    w, _ = _merge_rounds(_word_state(docs))
     wlen = w.select("word", (F.size(_syms()) - 1).alias("n_sub"))
     doctoks = docs.select(
         F.col("doc_id").alias("doc"),
@@ -389,9 +347,8 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. Exact integer word/subword counts; two shared division
     texts.
     """
-    _gc_previous_persists("q_tokenizer_fertility")
     docs = load_table(spark, sf_dir, "documents")
-    w, _ = _merge_rounds(_word_state(docs), "q_tokenizer_fertility")
+    w, _ = _merge_rounds(_word_state(docs))
     wlen = w.select("word", (F.size(_syms()) - 1).alias("n_sub"))
     doctoks = docs.select(
         F.col("doc_id").alias("doc"),

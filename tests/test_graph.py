@@ -1,22 +1,31 @@
-"""Unit tests for fixed-point PageRank (functions/graph.py)."""
+"""Unit tests for the graph kernels (functions/graph.py)."""
 
 from __future__ import annotations
+
+import ast
 
 from mapreduce_server_development_spark.functions.graph import (
     RANK_SCALE,
     pagerank_micro,
 )
 
+from .conftest import REPO
 
-def _py_pagerank(n_nodes, edges, iters=10, damping=85):
-    """Literal python model of the integer recurrence."""
+#: Star(0) + chain 4-5-6 + isolated 7.
+_STAR_CHAIN = [(0, 1), (0, 2), (0, 3), (4, 5), (5, 6)]
+
+
+def _py_pagerank(n_nodes, edges, iters=10, damping=85, seeds=None):
+    """Literal python model of the integer recurrence; with ``seeds``,
+    the personalized variant (start and teleport mass on seeds only)."""
     nbrs: dict[int, set[int]] = {v: set() for v in range(n_nodes)}
     for a, b in edges:
         if a != b:
             nbrs[a].add(b)
             nbrs[b].add(a)
+    sd = {v: int(seeds is None or v in seeds) for v in range(n_nodes)}
     base = (100 - damping) * RANK_SCALE // 100
-    r = {v: RANK_SCALE for v in range(n_nodes)}
+    r = {v: RANK_SCALE * sd[v] for v in range(n_nodes)}
     for _ in range(iters):
         inflow = {v: 0 for v in range(n_nodes)}
         for u, vs in nbrs.items():
@@ -24,7 +33,7 @@ def _py_pagerank(n_nodes, edges, iters=10, damping=85):
                 share = r[u] // len(vs)
                 for v in vs:
                     inflow[v] += share
-        r = {v: base + damping * inflow[v] // 100 for v in range(n_nodes)}
+        r = {v: sd[v] * base + damping * inflow[v] // 100 for v in range(n_nodes)}
     return r
 
 
@@ -32,7 +41,7 @@ def test_pagerank_matches_python_model(spark):
     """Star + chain + singleton: spark ranks must equal the literal
     integer model bit-for-bit (that exactness is what makes the DuckDB
     oracle possible)."""
-    edges = [(0, 1), (0, 2), (0, 3), (4, 5), (5, 6)]  # star(0), chain, 7 isolated
+    edges = _STAR_CHAIN
     n = 8
     ndf = spark.createDataFrame([(v,) for v in range(n)], "node long")
     edf = spark.createDataFrame(edges, "a long, b long")
@@ -45,6 +54,24 @@ def test_pagerank_matches_python_model(spark):
     # structural sanity: hub outranks leaves; singleton sits at base mass
     assert got[0] > got[1] == got[2] == got[3]
     assert got[7] == (100 - 85) * RANK_SCALE // 100
+
+
+def test_personalized_pagerank_matches_python_model(spark):
+    """With a seed column the same kernel is personalized PageRank: on
+    the star + chain + singleton graph it must equal the seeded integer
+    model bit-for-bit, and nodes the seeds cannot reach stay at 0."""
+    seeds = {1, 6}
+    n = 8
+    ndf = spark.createDataFrame(
+        [(v, int(v in seeds)) for v in range(n)], "node long, is_seed int"
+    )
+    edf = spark.createDataFrame(_STAR_CHAIN, "a long, b long")
+    got = {
+        r["node"]: r["rank_micro"]
+        for r in pagerank_micro(ndf, edf, iters=8, seed_col="is_seed").collect()
+    }
+    assert got == _py_pagerank(n, _STAR_CHAIN, iters=8, seeds=seeds)
+    assert got[7] == 0 and got[1] > 0 and got[4] > 0
 
 
 def test_pagerank_regular_graph_fixed_point(spark):
@@ -160,3 +187,28 @@ def test_whale_basket_excluded_identically_by_both_engines(spark, tmp_path):
     finally:
         con.close()
     assert oracle == got
+
+
+def test_copurchase_pair_self_join_has_one_copy():
+    """The order-keyed pair self-join over graph_common.capped_po is
+    written once, in graph_common.copurchase_edges: every graph query
+    takes its edges from there instead of re-deriving them."""
+    copies = []
+    for path in sorted((REPO / "mapreduce_server_development_spark").rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+            loads_po = any(getattr(c.func, "id", None) == "capped_po" for c in calls)
+            order_join = any(
+                getattr(c.func, "attr", None) == "join"
+                and any(
+                    isinstance(n, ast.Constant) and n.value == "l_orderkey"
+                    for a in c.args
+                    for n in ast.walk(a)
+                )
+                for c in calls
+            )
+            if loads_po and order_join:
+                copies.append(f"{path.stem}.{fn.name}")
+    assert copies == ["graph_common.copurchase_edges"]

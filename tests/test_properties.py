@@ -175,6 +175,44 @@ def test_connected_components_star_match_union_find(spark, edges):
     assert got == want
 
 
+@settings(max_examples=8, deadline=None)
+@given(
+    edges=st.sets(st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=25),
+    seeds=st.sets(st.integers(0, 9), min_size=1, max_size=3),
+    hops=st.integers(0, 4),
+)
+def test_bfs_levels_match_python_bfs(spark, edges, seeds, hops):
+    """Each (seed, v) within ``hops`` of its seed appears exactly once,
+    at level = its BFS distance, with sig = its number of shortest
+    paths; nothing farther appears (directed edges, self-loops and
+    unreachable vertices included)."""
+    from mapreduce_server_development_spark.functions.graph import bfs_levels
+
+    out = {v: [b for a, b in sorted(edges) if a == v] for v in range(10)}
+    want = {}
+    for s in seeds:
+        dist, sig, frontier = {s: 0}, {s: 1}, [s]
+        for h in range(1, hops + 1):
+            nxt = {}
+            for u in frontier:
+                for w in out[u]:
+                    if w not in dist:
+                        nxt[w] = nxt.get(w, 0) + sig[u]
+            for w, c in nxt.items():
+                dist[w], sig[w] = h, c
+            frontier = list(nxt)
+        want.update({(s, v): (dist[v], sig[v]) for v in dist})
+
+    sym = spark.createDataFrame(sorted(edges), "src long, dst long")
+    seed_df = spark.createDataFrame([(s,) for s in seeds], "seed long")
+    got = {}
+    for h, level in enumerate(bfs_levels(sym, seed_df, hops)):
+        for r in level.collect():
+            assert (r["seed"], r["v"]) not in got
+            got[(r["seed"], r["v"])] = (h, int(r["sig"]))
+    assert got == want
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     vals=st.lists(st.integers(0, 1000), min_size=1, max_size=60),
