@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .text import tokens_col, word_shingles
 
 #: Hex-digit characters, used to decode md5 nibbles via position lookup.
@@ -289,7 +290,7 @@ def minhash_near_dups(
     session.release_checkpoints; executor-loss semantics at cluster
     scale documented in SCALE.md "Local checkpoints".
     """
-    sh = _doc_shingles(df, text_col, id_col, shingle_n).localCheckpoint(eager=True)
+    sh = materialize(_doc_shingles(df, text_col, id_col, shingle_n))
     cand = minhash_band_pairs(
         df, text_col, id_col, num_hashes, rows_per_band, shingle_n, shingles=sh
     ).select("doc_a", "doc_b")
@@ -489,19 +490,18 @@ def connected_components(
     sym = edges.select("a", "b").union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    sym = sym.localCheckpoint(eager=True)
-    labels = nodes.select(
+    sym = materialize(sym)
+    labels = materialize(nodes.select(
         F.col("node"), F.col("node").alias("component")
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(max_iter):
         prop = sym.join(labels, sym.a == labels.node).select(
             F.col("b").alias("node"), F.col("component")
         )
-        new_labels = (
+        new_labels = materialize(
             labels.union(prop)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
         )
         improved = (
             new_labels.alias("n")
@@ -786,12 +786,11 @@ def connected_components_star(
     multiset is compared by (count, hash-sum) checksum, which is stable
     exactly at the star fixpoint.
     """
-    sym = (
+    sym = materialize(
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .union(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def half_step(e: DataFrame, large: bool) -> DataFrame:
@@ -830,7 +829,7 @@ def connected_components_star(
     prev = checksum(sym)
     for _ in range(max_iter):
         sym = half_step(sym, large=True)
-        sym = half_step(sym, large=False).localCheckpoint(eager=True)
+        sym = materialize(half_step(sym, large=False))
         cur = checksum(sym)
         if cur == prev:
             break

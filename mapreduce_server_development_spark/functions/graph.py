@@ -1,7 +1,7 @@
 """Graph kernels shared by the graph-family queries: edge
 symmetrization, degrees, hop-bounded BFS, synchronous label
-propagation, fixed-point integer PageRank and degree-oriented
-triangles. Each kernel exists once, so a change to its iteration
+propagation, fixed-point integer PageRank, max-normalized mutual
+reinforcement (HITS) and degree-oriented triangles. Each kernel exists once, so a change to its iteration
 cadence (checkpoints, fused stages) is one edit here.
 
 PageRank turns graph structure into per-document quality weights for
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 #: One unit of rank mass, in micro-units.
 RANK_SCALE = 1_000_000
@@ -81,22 +83,21 @@ def bfs_levels(sym: DataFrame, seeds: DataFrame, hops: int) -> list[DataFrame]:
     readout, and the lineage stays flat.
     """
     levels = [
-        seeds.select(
+        materialize(seeds.select(
             "seed",
             F.col("seed").alias("v"),
             F.lit(1).cast("decimal(38,0)").alias("sig"),
-        ).localCheckpoint(eager=True)
+        ))
     ]
     visited = levels[0].select("seed", "v")
     for _ in range(hops):
         prev = levels[-1]
-        new = (
+        new = materialize(
             prev.join(sym, prev["v"] == sym["src"])
             .groupBy("seed", F.col("dst").alias("nv"))
             .agg(F.sum("sig").alias("sig"))
             .withColumnRenamed("nv", "v")
             .join(visited, ["seed", "v"], "left_anti")
-            .localCheckpoint(eager=True)
         )
         levels.append(new)
         visited = visited.union(new.select("seed", "v"))
@@ -144,7 +145,7 @@ def lpa_labels(sym: DataFrame, rounds: int) -> DataFrame:
             .select("v", (-F.col("m.nl")).alias("lbl"))
         )
         if rnd % 2 == 0:
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize(labels)
     return labels
 
 
@@ -170,18 +171,17 @@ def pagerank_micro(
     the seed set's reachable frontier in early rounds.
     """
     base = (100 - DAMPING_PCT) * RANK_SCALE // 100
-    sym = (
+    sym = materialize(
         sym_edges(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
     sd = F.col(seed_col) if seed_col else F.lit(1)
     seeds = nodes.select("node", sd.cast("long").alias("sd"))
     r = seeds.select(
         "node", (F.lit(RANK_SCALE) * F.col("sd")).cast("long").alias("r")
-    ).localCheckpoint(eager=True)
+    )
     for k in range(iters):
         contrib = (
             sym.join(deg, "src")
@@ -199,8 +199,56 @@ def pagerank_micro(
             .alias("r"),
         )
         if (k + 1) % _RANK_CHECKPOINT_EVERY == 0 or k == iters - 1:
-            r = r.localCheckpoint(eager=True)
+            r = materialize(r)
     return r.select("node", F.col("r").alias("rank_micro"))
+
+
+def _inflow(
+    edges: DataFrame, scores: DataFrame, key: str, out: str, weight: str | None
+) -> DataFrame:
+    """One half-round's raw inflow ``(out, s)``: ``edges ⋈ scores(key,
+    score)`` on ``key``, summed per ``out`` in DECIMAL(38,0) (score ≤
+    1e6 times degree ≤ 1e12 edges stays exact far past int64)."""
+    term = f"CAST({weight} AS DECIMAL(38,0)) * score" if weight else (
+        "CAST(score AS DECIMAL(38,0))"
+    )
+    return edges.join(scores, key).groupBy(out).agg(F.expr(f"SUM({term})").alias("s"))
+
+
+def hits_scores(
+    edges: DataFrame,
+    hub: str,
+    auth: str,
+    rounds: int,
+    weight: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Mutual reinforcement over the bipartite ``edges(hub, auth[,
+    weight])`` (Kleinberg's HITS; with ``weight`` it is power iteration
+    on AᵀA): every hub starts at ``RANK_SCALE``, and each round scores
+    the authorities by their hubs' inflow, then the hubs by their
+    authorities'. Each half-round is max-normalized in e6 fixed point,
+    ``RANK_SCALE·s DIV max(s)``, which keeps the L2 ranking in exact
+    integers. Returns ``(hubs(hub, score), auths(auth, score))``.
+
+    The raw inflow is materialized once per half-round, so the 1-row
+    max and the normalized projection both read it instead of re-running
+    the edge join.
+    """
+
+    def half(scores: DataFrame, key: str, out: str) -> DataFrame:
+        raw = materialize(_inflow(edges, scores, key, out, weight))
+        mx = raw.agg(F.max("s").alias("mx"))
+        return raw.crossJoin(F.broadcast(mx)).selectExpr(
+            out, f"CAST({RANK_SCALE} * s DIV mx AS BIGINT) AS score"
+        )
+
+    hubs = edges.select(hub).distinct().select(
+        hub, F.lit(RANK_SCALE).cast("long").alias("score")
+    )
+    for _ in range(rounds):
+        auths = half(hubs, hub, auth)
+        hubs = half(auths, auth, hub)
+    return hubs, auths
 
 
 def orient_edges_by_degree(e: DataFrame) -> DataFrame:
@@ -242,7 +290,7 @@ def _triangles(e: DataFrame) -> DataFrame:
     order to avoid double counting) equi-joined against the oriented
     edges find every triangle once, at the O(m^{3/2}) wedge bound.
     """
-    oriented = orient_edges_by_degree(e).localCheckpoint(eager=True)
+    oriented = materialize(orient_edges_by_degree(e))
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     lex = (F.col("o1.dv") < F.col("o2.dv")) | (
         (F.col("o1.dv") == F.col("o2.dv")) & (F.col("o1.v") < F.col("o2.v"))

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 #: Internal column names — prefixed to avoid user-column collisions.
 _PID = "__prefix_pid"
 _OFF = "__prefix_offset"
@@ -52,11 +54,10 @@ def global_running_sum(
     from pyspark.sql import types as T
 
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    part = (
+    part = materialize(
         df.repartitionByRange(n, F.col(order_col))
         .sortWithinPartitions(order_col)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     # Tiny: one row per partition. The offset column takes the SUM's
     # own result type (long sums stay long, double double, decimal the
@@ -119,11 +120,10 @@ def global_row_number(
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
+    part = materialize(
         df.repartitionByRange(n, *cols)
         .sortWithinPartitions(*cols)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     # Tiny: one row per partition.
     counts = part.groupBy(_PID).count().collect()
@@ -161,11 +161,10 @@ def global_running_min(
     recurrence into two distributed prefix passes.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    part = (
+    part = materialize(
         df.repartitionByRange(n, F.col(order_col))
         .sortWithinPartitions(order_col)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     totals_df = part.groupBy(_PID).agg(F.min(value_col).alias("t"))
     min_type = totals_df.schema["t"].dataType

@@ -22,6 +22,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def lsh_plane_weights(num_planes: int, dim: int) -> list[list[float]]:
     """Deterministic +-1 hyperplane weights from md5 parity.
@@ -242,9 +244,9 @@ def embedding_near_dup_pairs(
     # 32-plane signature + norm chain is the expensive projection, so
     # materialize it once instead of once per consumer (r11 checkpoint
     # discipline; no shared exchange exists to reuse across them).
-    base = base.withColumn("nrm", _norm(F.col("v"))).withColumn(
+    base = materialize(base.withColumn("nrm", _norm(F.col("v"))).withColumn(
         "sig", lsh_signature(F.col("v"), sig_bits, dim)
-    ).localCheckpoint(eager=True)
+    ))
     bands = base.select(
         "vid",
         F.explode(

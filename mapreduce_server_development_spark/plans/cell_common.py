@@ -195,8 +195,8 @@ def cell_assign_stages(
     ``materialize`` (optional, DataFrame -> DataFrame) wraps each
     stage as it is built. A caller that consumes SEVERAL stages (the
     quantizer-train ledger reads every stage 3-4 times: counts, fit
-    stats, and the move diff against the next stage) passes an eager
-    ``localCheckpoint`` here — otherwise each consumer re-inlines the
+    stats, and the move diff against the next stage) passes
+    ``session.materialize`` here — otherwise each consumer re-inlines the
     whole argmax -> Lloyd -> argmax chain and the per-stage subtree is
     re-evaluated multiplicatively (q_cell_quantizer_train before-plan:
     147 stages / 1554 tasks for 3 Lloyd stages). Callers that consume

@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.graph import hits_scores
 from ..functions.text import tokens_col, word_shingles
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -943,13 +945,13 @@ def _nb_scored(spark: SparkSession, sf_dir: str):
     # _nb_scored consumers' downstream aggregates read materialized
     # relations instead of re-running scan+tokenize+explode(+count)
     # per branch (r11 checkpoint discipline; results unchanged).
-    toks = split.select(
+    toks = materialize(split.select(
         "doc_id", "source", "is_train", F.explode("toks").alias("tok")
-    ).localCheckpoint(eager=True)
+    ))
     train_toks = toks.filter("is_train")
-    counts = train_toks.groupBy("source", "tok").agg(
+    counts = materialize(train_toks.groupBy("source", "tok").agg(
         F.count("*").alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     totals = counts.groupBy("source").agg(F.sum("c").alias("tot"))
     vocab = counts.agg(F.countDistinct("tok").alias("v"))
     lp = (
@@ -1117,10 +1119,10 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc"),
         F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
     )
-    dl = toks.groupBy("doc").agg(
+    dl = materialize(toks.groupBy("doc").agg(
         F.count("*").cast("long").alias("n_toks"),
         F.countDistinct("tok").cast("long").alias("d_toks"),
-    ).localCheckpoint(eager=True)
+    ))
     g = dl.agg(
         F.count("*").cast("long").alias("n"),
         (F.sum("n_toks").cast("double") / F.count("*")).alias("avgdl"),
@@ -1547,14 +1549,13 @@ def q_fightin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|-parallel audit shape.
     """
     docs = load_table(spark, sf_dir, "documents")
-    ysw = (
+    ysw = materialize(
         docs.select(
             "source",
             F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count("*").cast("long").alias("y"))
-        .localCheckpoint(eager=True)
     )
     yw = ysw.groupBy("tok").agg(F.sum("y").cast("long").alias("yw"))
     ns = ysw.groupBy("source").agg(F.sum("y").cast("long").alias("ns"))
@@ -1779,7 +1780,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df_ = tf.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
     nd = tf.agg(F.countDistinct("doc").cast("long").alias("nd"))
-    w = (
+    w = materialize(
         tf.join(df_, "tok")
         .filter(F.col("df") <= _TC_MAX_DF)
         .crossJoin(F.broadcast(nd))
@@ -1789,7 +1790,6 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"tf * CAST(round(ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))"
             f" * {_TC_SCALE}) AS BIGINT) AS w",
         )
-        .localCheckpoint(eager=True)
     )
     norms = w.groupBy("doc").agg(
         F.sum(F.expr("CAST(w AS DECIMAL(38,0)) * w"))
@@ -2027,14 +2027,13 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = ranked.crossJoin(F.broadcast(nd)).selectExpr(
         "doc_id", f"(({_HEAPS_DEC} * (rk - 1)) DIV nd) + 1 AS dec"
     )
-    tr = (
+    tr = materialize(
         docs.select(
             "doc_id",
             F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
         )
         .join(dec, "doc_id")
         .select("dec", "tok")
-        .localCheckpoint(eager=True)
     )
     words = tr.groupBy("dec").agg(F.count("*").cast("long").alias("w"))
     vocab = (
@@ -2058,7 +2057,7 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dec",
         )
     )
-    cells = cum.selectExpr(
+    cells = materialize(cum.selectExpr(
         "dec",
         "words_cum",
         "vocab_cum",
@@ -2066,7 +2065,7 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS lx",
         "CAST(round(ln(CAST(vocab_cum AS DOUBLE)) * 1000000) AS BIGINT)"
         " AS ly",
-    ).localCheckpoint(eager=True)
+    ))
     fit = cells.agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.col("lx").cast("decimal(38,0)")).cast("double").alias("sx"),
@@ -2552,15 +2551,14 @@ def q_nb_crossval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc, tok) row by its count — identical scores by integer
     # linearity; the r11 ADVICE ask to not checkpoint the full
     # exploded relation).
-    tokn = (
+    tokn = materialize(
         split.select("doc_id", "source", "fold", F.explode("toks").alias("tok"))
         .groupBy("doc_id", "source", "fold", "tok")
         .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=True)
     )
-    tokc = tokn.groupBy("fold", "source", "tok").agg(
+    tokc = materialize(tokn.groupBy("fold", "source", "tok").agg(
         F.sum("n").cast("long").alias("cf")
-    ).localCheckpoint(eager=True)
+    ))
     glob = tokc.groupBy("source", "tok").agg(F.sum("cf").cast("long").alias("cg"))
     tcf = tokc.groupBy("fold", "source").agg(F.sum("cf").alias("tf"))
     tcg = glob.groupBy("source").agg(F.sum("cg").alias("tg"))
@@ -2758,6 +2756,9 @@ def q_lsa_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Terms appearing in every document carry zero idf and are dropped
     identically in both engines.
 
+    The rounds are ``functions.graph.hits_scores`` with the terms as
+    hubs and the TF-IDF weight on each edge.
+
     Scale: each half-round is one term- or doc-keyed equi-join over
     the sparse triple relation plus a partial-agg'd sum — 2 shuffles
     per round, linear in nnz(A), never a dense matrix; the normalizing
@@ -2778,7 +2779,7 @@ def q_lsa_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     nd = docs.agg(F.count("*").cast("long").alias("n"))
-    a = (
+    a = materialize(
         tf.join(df, "term")
         .crossJoin(F.broadcast(nd))
         .filter(F.col("df") < F.col("n"))
@@ -2788,34 +2789,12 @@ def q_lsa_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST(round(tf * ln(CAST(n AS DOUBLE) / df) * {_LSA_E6})"
             " AS BIGINT) AS w",
         )
-        .localCheckpoint(eager=True)
     )
 
-    def _normalize(raw: DataFrame, key: str, out: str) -> DataFrame:
-        raw = raw.localCheckpoint(eager=True)
-        mx = raw.agg(F.max("s").alias("mx"))
-        return raw.crossJoin(F.broadcast(mx)).selectExpr(
-            key, f"CAST({_LSA_E6} * s DIV mx AS BIGINT) AS {out}"
-        )
-
-    v = a.select("term").distinct().select(
-        "term", F.lit(_LSA_E6).cast("long").alias("v")
-    )
-    for _ in range(_LSA_ROUNDS):
-        u_raw = (
-            a.join(v, "term")
-            .groupBy("doc")
-            .agg(F.sum(F.expr("CAST(w AS DECIMAL(38,0)) * v")).alias("s"))
-        )
-        u = _normalize(u_raw, "doc", "u")
-        v_raw = (
-            a.join(u, "doc")
-            .groupBy("term")
-            .agg(F.sum(F.expr("CAST(w AS DECIMAL(38,0)) * u")).alias("s"))
-        )
-        v = _normalize(v_raw, "term", "v")
+    v, _ = hits_scores(a, "term", "doc", _LSA_ROUNDS, weight="w")
     return (
-        v.orderBy(F.col("v").desc(), "term")
+        v.withColumnRenamed("score", "v")
+        .orderBy(F.col("v").desc(), "term")
         .limit(_LSA_TOPN)
         .selectExpr(*_LSA_FINAL)
         .orderBy(F.col("loading_e6").desc(), "term")
@@ -2961,23 +2940,21 @@ def q_nb_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokc/cf feed several downstream aggregates. Checkpoint the three
     # (r11 checkpoint discipline) so each consumer reads materialized
     # rows instead of re-running the tokenize/explode/count subtrees.
-    toks = toks0.select(
+    toks = materialize(toks0.select(
         "doc_id", "source", "dec", F.explode("toks").alias("tok")
-    ).localCheckpoint(eager=True)
+    ))
     fr = docs.sparkSession.createDataFrame(
         [(f,) for f in _NBLC_FRACS], "f long"
     )
-    tokc = (
+    tokc = materialize(
         toks.filter(F.col("dec") < 9)
         .groupBy("dec", "source", "tok")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
-    cf = (
+    cf = materialize(
         tokc.join(F.broadcast(fr), tokc["dec"] < fr["f"])
         .groupBy("f", "source", "tok")
         .agg(F.sum("c").alias("c"))
-        .localCheckpoint(eager=True)
     )
     tot = cf.groupBy("f", "source").agg(F.sum("c").alias("tot"))
     voc = (

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col, word_shingles
+from ..session import materialize
 from ..sources.tables import load_table
 from .cell_common import cell_assign, cell_ctes
 from .registry import query
@@ -312,7 +313,7 @@ def _knn_graph_df(
         / (F.col("na") * F.col("nb")),
         4,
     )
-    knn = (
+    knn = materialize(
         a.join(b, ["cid", "sub"])
         .filter(F.col("vid") != F.col("bvid"))
         .withColumn("pcos", pcos)
@@ -326,7 +327,6 @@ def _knn_graph_df(
         )
         .filter(F.col("rn") <= _KNN_K)
         .select("vid", "bvid")
-        .localCheckpoint(eager=True)
     )
     und = knn.groupBy(
         F.least("vid", "bvid").alias("a"),
@@ -494,7 +494,7 @@ def q_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         prod = nrm(cv) * nrm(qv)
         return F.round(F.when(prod != 0.0, dot / prod), 4)
 
-    pairs = (
+    pairs = materialize(
         base.crossJoin(F.broadcast(q))
         .filter(F.col("vid") != F.col("qid"))
         .select(
@@ -502,7 +502,6 @@ def q_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vid",
             *[cos_d(d).alias(f"cos{d}") for d in _MAT_DIMS],
         )
-        .localCheckpoint(eager=True)
     )
     picks = None
     for d in _MAT_DIMS:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.similarity import _dot
 from ..functions.text import tokens_col, word_shingles
+from ..session import materialize
 from ..sources.tables import load_table
 from .cell_common import cell_assign, cell_ctes
 from .registry import query
@@ -1603,7 +1604,7 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     # full argmax subtree into the plan (r11 before-plan:
     # q_ivfpq_ann 558 Exchanges / 175 parquet scans, ~0.5 MB of plan
     # text; after: see plans/r11/q_ivfpq_ann_after.txt).
-    assign = _cell_assign(emb, extra=()).localCheckpoint(eager=True)
+    assign = materialize(_cell_assign(emb, extra=()))
     v = assign.select("vid", "vv")
     # Residual encoding (Jegou et al. 2011 sec. V): PQ quantizes
     # v - centroid(cell(v)). The centroid panel is the rank-seed
@@ -1613,10 +1614,9 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     # scan + repartition + top-k per reference.
     base, _ = cell_base(emb)
     k = seed_k(base)
-    cent = (
+    cent = materialize(
         rank_seed_centroids(base, k)
         .select("cid", "cv", "cnrm")
-        .localCheckpoint(eager=True)
     )
     rv = assign.join(F.broadcast(cent.select("cid", "cv")), "cid").select(
         "vid", F.zip_with("vv", "cv", lambda x, y: x - y).alias("rv")
@@ -1651,14 +1651,14 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     # Squared norms once per subvector/codeword row, not once per
     # candidate pair.
     sub = sub.withColumn("sn", _pq_udot("sv", "sv"))
+    # 2048-row seed codebook, read once: by the Lloyd pass below, whose
+    # refit codebook cb1 is the materialized one.
     cb = sub.join(F.broadcast(pq_seed_ids), "vid").select(
         F.col("vid").alias("pcid"),
         "m",
         F.col("sv").alias("cv"),
         F.col("sn").alias("cn"),
-    ).localCheckpoint(eager=True)  # 2048-row codebook, broadcast into
-    # enc AND lut; checkpointed (not persisted) so the training chain
-    # is materialized once and cut from every downstream plan
+    )
 
     # Nearest codeword per (vid, m): a map-side-combinable min_by
     # aggregate over the broadcast codebook join, NOT a window — the
@@ -1692,20 +1692,19 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
         .groupBy("m", "pcid", "pos")
         .agg(F.round(F.avg("val"), 6).alias("mu"))
     )
-    cb1 = (
+    cb1 = materialize(
         dm.groupBy("m", "pcid")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "mu"))).alias("pm"))
         .select(
             "m", "pcid", F.transform(F.col("pm"), lambda s: s["mu"]).alias("cv")
         )
         .withColumn("cn", _pq_udot("cv", "cv"))
-        .localCheckpoint(eager=True)
     )
     # Corpus codes: n x M rows (tiny relative to the n x M x 256
     # candidate relation that produced them). Checkpointed — the ADC
     # consumers (one per probe in the nprobe curve) otherwise each
     # re-inline the whole encode subtree.
-    enc = _nearest(sub, cb1).localCheckpoint(eager=True)
+    enc = materialize(_nearest(sub, cb1))
     q = assign.filter(
         (F.col("vid") % 97 == 3) & (F.col("vid") < 1000)
     ).select(
@@ -3004,7 +3003,7 @@ def q_cell_quantizer_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent,
         (),
         train_iters=_CQT_ITERS,
-        materialize=lambda df: df.localCheckpoint(eager=True),
+        materialize=materialize,
     )
     out = None
     for r, st in enumerate(stages):

@@ -55,10 +55,12 @@ from pyspark.sql import functions as F
 from ..functions.graph import (
     bfs_levels,
     degrees,
+    hits_scores,
     lpa_labels,
     sym_edges,
     triangles_per_vertex,
 )
+from ..session import materialize
 from ..sources.tables import load_table
 from .graph_common import copurchase_edges, po_sql
 from .registry import query
@@ -351,11 +353,10 @@ def _cf_frames(spark: SparkSession, sf_dir: str):
         .distinct()
     )
     sz = bought.groupBy("cust").agg(F.count("*").alias("n"))
-    kept = (
+    kept = materialize(
         bought.join(sz, "cust")
         .filter(F.col("n") <= _CF_BASKET_CAP)
         .select("cust", "part")
-        .localCheckpoint(eager=True)
     )
     pop = kept.groupBy("part").agg(F.count("*").cast("long").alias("p"))
     x, y = kept.alias("x"), kept.alias("y")
@@ -480,51 +481,24 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round cost exactly (2 shuffles), linear in |edges|, with NO
     quadratic wedge fan-out anywhere (unlike RA/CF, HITS never pairs
     neighbors). The normalizing MAX is a 1-row agg broadcast back;
-    rounds are fixed (3) and the edge relation is localCheckpoint()ed
-    once. Top-10s compile to TakeOrderedAndProject.
+    rounds are fixed (3) and the edge relation is materialized once
+    (the loop is ``functions.graph.hits_scores``, shared with
+    q_lsa_topic). Top-10s compile to TakeOrderedAndProject.
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    bought = (
+    bought = materialize(
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
-    def _normalize(raw: DataFrame, key: str, out: str) -> DataFrame:
-        # Checkpoint the RAW inflow sums once; the 1-row max agg and the
-        # normalized projection then both read the materialized relation
-        # instead of re-running the edge join (2x fewer joins per
-        # half-round than checkpointing the normalized side — A/B'd:
-        # 27.7s -> see STATUS).
-        raw = raw.localCheckpoint(eager=True)
-        mx = raw.agg(F.max("s").alias("mx"))
-        return raw.crossJoin(F.broadcast(mx)).select(
-            key, F.expr(f"CAST(({_HITS_SCALE} * s) DIV mx AS BIGINT)").alias(out)
-        )
-
-    h = bought.select("c").distinct().select(
-        "c", F.lit(_HITS_SCALE).cast("long").alias("h")
-    )
-    for _ in range(_HITS_ROUNDS):
-        a_raw = (
-            bought.join(h, "c")
-            .groupBy("p")
-            .agg(F.expr("SUM(CAST(h AS DECIMAL(38,0)))").alias("s"))
-        )
-        a = _normalize(a_raw, "p", "a")
-        h_raw = (
-            bought.join(a, "p")
-            .groupBy("c")
-            .agg(F.expr("SUM(CAST(a AS DECIMAL(38,0)))").alias("s"))
-        )
-        h = _normalize(h_raw, "c", "h")
+    h, a = hits_scores(bought, "c", "p", _HITS_ROUNDS)
     top_a = (
         a.select(
             F.lit("authority").alias("role"),
             F.col("p").cast("long").alias("node_id"),
-            F.col("a").alias("score_e6"),
+            F.col("score").alias("score_e6"),
         )
         .orderBy(F.col("score_e6").desc(), "node_id")
         .limit(10)
@@ -533,7 +507,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         h.select(
             F.lit("hub").alias("role"),
             F.col("c").cast("long").alias("node_id"),
-            F.col("h").alias("score_e6"),
+            F.col("score").alias("score_e6"),
         )
         .orderBy(F.col("score_e6").desc(), "node_id")
         .limit(10)
@@ -632,11 +606,10 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     ).distinct()
     sz = bi_all.groupBy("o").agg(F.count("*").alias("n"))
-    bi = (
+    bi = materialize(
         bi_all.join(sz, "o")
         .filter(F.col("n") <= _AR_BASKET_CAP)
         .select("o", "p")
-        .localCheckpoint(eager=True)
     )
     nb = bi.agg(F.countDistinct("o").cast("long").alias("n"))
     cnt = bi.groupBy("p").agg(F.count("*").cast("long").alias("c"))
@@ -900,7 +873,7 @@ def q_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: |seeds|× the q_copurchase_bfs cost — key-partitioned
     joins only; nothing global, no windows.
     """
-    sym = sym_edges(copurchase_edges(spark, sf_dir, 2)).localCheckpoint(eager=True)
+    sym = sym_edges(copurchase_edges(spark, sf_dir, 2))
     seeds = (
         sym.select("src")
         .distinct()
@@ -1265,7 +1238,7 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bounded predecessor relations in reverse. No window, no
     collect, no all-pairs anything.
     """
-    sym = sym_edges(copurchase_edges(spark, sf_dir)).localCheckpoint(eager=True)
+    sym = sym_edges(copurchase_edges(spark, sf_dir))
     seeds = (
         sym.select("src")
         .distinct()
@@ -1297,17 +1270,18 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(sig_p AS DECIMAL(38,0)) * 1000000000 DIV sig_v"
     )
     deltas = {
-        _BC_HOPS - 1: preds[_BC_HOPS]
-        .groupBy("seed", F.col("p").alias("v"))
-        .agg(F.sum(term_leaf).cast("decimal(38,0)").alias("delta"))
-        .localCheckpoint(eager=True)
+        _BC_HOPS - 1: materialize(
+            preds[_BC_HOPS]
+            .groupBy("seed", F.col("p").alias("v"))
+            .agg(F.sum(term_leaf).cast("decimal(38,0)").alias("delta"))
+        )
     }
     for r in range(_BC_HOPS - 2, 0, -1):
         term = F.expr(
             "CAST(sig_p AS DECIMAL(38,0))"
             " * (1000000000 + COALESCE(delta, 0)) DIV sig_v"
         )
-        deltas[r] = (
+        deltas[r] = materialize(
             preds[r + 1]
             .join(
                 deltas[r + 1].select(
@@ -1318,7 +1292,6 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("seed", F.col("p").alias("v"))
             .agg(F.sum(term).cast("decimal(38,0)").alias("delta"))
-            .localCheckpoint(eager=True)
         )
     all_d = None
     for r in range(1, _BC_HOPS):

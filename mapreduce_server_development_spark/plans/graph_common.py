@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.tables import load_table
 
 #: Whale-basket cap for order-keyed pair generation — same value (and
@@ -90,7 +91,7 @@ def copurchase_edges(
     instead of re-running it per reference.
     """
     po = capped_po(spark, sf_dir)
-    return (
+    return materialize(
         po.alias("x")
         .join(po.alias("y"), "l_orderkey")
         .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
@@ -100,5 +101,4 @@ def copurchase_edges(
         .agg(F.count("*").alias("sup"))
         .filter(F.col("sup") >= min_support)
         .select("a", "b")
-        .localCheckpoint(eager=True)
     )

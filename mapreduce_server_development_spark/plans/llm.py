@@ -49,6 +49,7 @@ from ..functions.similarity import (
     semantic_dedup_flags,
 )
 from ..functions.text import STOPWORDS, tokens_col, word_shingles
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -2405,19 +2406,18 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(docs, "text", "doc_id", 3)
     from ..functions.dedup import minhash_signatures
 
-    sig = minhash_signatures(
+    sig = materialize(minhash_signatures(
         docs, num_hashes=16, shingle_n=3, shingles=sh
-    ).localCheckpoint(eager=True)
+    ))
     s1 = sig.select(F.col("doc").alias("doc_a"), "seed", F.col("h").alias("h1"))
     s2 = sig.select(F.col("doc").alias("doc_b"), "seed", F.col("h").alias("h2"))
-    truth = (
+    truth = materialize(
         s1.join(s2, "seed")
         .filter((F.col("h1") == F.col("h2")) & (F.col("doc_a") < F.col("doc_b")))
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_agree"))
         .filter(F.col("n_agree") >= _LSHT_AGREE)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
     n_true_df = truth.agg(F.count("*").cast("long").alias("n_true"))
     rows = []

@@ -34,6 +34,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 from .sampling import _bucket_sql, hash_bucket
@@ -312,12 +313,11 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # border assignment) through broadcast joins with no shared
     # exchange to reuse — checkpoint it so the 9-cell probe join runs
     # once (r11 checkpoint discipline).
-    neigh = (
+    neigh = materialize(
         pts.withColumnRenamed("vec_id", "ia")
         .join(b, (F.col("cx") == F.col("gcx")) & (F.col("cy") == F.col("gcy")))
         .filter(d2 <= F.lit(_EPS * _EPS))
         .select("ia", "ib")
-        .localCheckpoint(eager=True)
     )
     core = (
         neigh.groupBy("ia")
@@ -752,7 +752,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every 2nd squaring caps the tree depth; the materialization
         # itself is a single-row no-op.
         if (i + 1) % 2 == 0 and i + 1 < t:
-            cur = cur.localCheckpoint(eager=True)
+            cur = materialize(cur)
     cur = cur.selectExpr(*allc, *e["vr"])
     cur = cur.selectExpr(*allc, *[f"vr_{k}" for k in range(d)], e["vnrm"])
     cur = cur.selectExpr(*allc, *e["v"])
@@ -1297,11 +1297,10 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task count (ONE for a single-row-group file), and every power
     # round re-reads xc at the checkpoint's partitioning — without the
     # repartition all 6 rounds' map work would run on one core.
-    xc = (
+    xc = materialize(
         d.join(F.broadcast(mu), "dim")
         .select("vid", "dim", F.round(F.col("x") - F.col("mu"), 6).alias("xc"))
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
     )
     nn = xc.agg(F.countDistinct("vid").cast("long").alias("n"))
 
@@ -1331,7 +1330,7 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = (
+        v = materialize(
             w.crossJoin(F.broadcast(m))
             .select(
                 "dim",
@@ -1339,7 +1338,6 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("w") / F.nullif(F.col("m") * F.lit(1.0), F.lit(0.0)), 6
                 ).alias("vd"),
             )
-            .localCheckpoint(eager=True)
         )
 
     vn = v.agg(

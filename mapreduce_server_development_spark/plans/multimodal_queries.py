@@ -21,6 +21,7 @@ from ..functions.multimodal import (
     tensor_stats,
     tile_patches_stub,
 )
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -320,7 +321,7 @@ def q_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpointed: the hash relation feeds 4 band self-joins (x2
     # sides) plus the two verify joins — uncheckpointed, the PYTHON
     # synth+decode+hash stage would re-execute ~10x per run.
-    h = ahash_images(_media_df(spark, sf_dir)).localCheckpoint(eager=True)
+    h = materialize(ahash_images(_media_df(spark, sf_dir)))
     a, b = h.alias("a"), h.alias("b")
     cand = None
     for k in range(4):

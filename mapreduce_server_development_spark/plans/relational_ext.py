@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.graph import bfs_levels, count_triangles, degrees, sym_edges
+from ..session import materialize
 from ..sources.tables import load_table
 from .graph_common import capped_po, copurchase_edges, po_sql
 from .registry import query
@@ -2969,11 +2970,10 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     converged = False
     for _ in range(_KCORE_ORACLE_ROUNDS):
         keep = degrees(e).filter(F.col("d") >= _KCORE_K).select("x")
-        e = (
+        e = materialize(
             e.join(keep.select(F.col("x").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("x").alias("b")), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
         n_now = e.count()
         if n_now == n_edges:
@@ -3610,11 +3610,9 @@ def q_churn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks, never a window or a per-user state machine.
     """
     ev = load_table(spark, sf_dir, "events")
-    mu = (
-        ev.select(
-            F.date_trunc("week", "ts").alias("week"), "user_id"
-        ).distinct()
-    ).localCheckpoint(eager=True)
+    mu = materialize(
+        ev.select(F.date_trunc("week", "ts").alias("week"), "user_id").distinct()
+    )
     cur = mu.select(F.col("week").alias("m"), F.col("user_id").alias("u_cur"))
     prv = mu.select(
         F.expr("week + INTERVAL 1 WEEK").alias("m"),
@@ -3713,11 +3711,11 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared float texts. No window, no per-user state.
     """
     ev = load_table(spark, sf_dir, "events")
-    du = ev.select(
+    du = materialize(ev.select(
         F.col("ts").cast("date").alias("day"),
         F.date_trunc("month", "ts").alias("month"),
         "user_id",
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     dau = du.groupBy("month", "day").agg(
         F.count("*").cast("long").alias("dau")
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_topk
 from ..functions.text import tokens_col
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -741,7 +742,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vv").alias("bvv"),
         F.col("nrm").alias("bnrm"),
     )
-    sims = (
+    sims = materialize(
         cvec.join(F.broadcast(b), "qid")
         .filter(F.col("did") != F.col("b_did"))
         .select(
@@ -754,9 +755,8 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sim4"),
         )
-        .localCheckpoint(eager=True)
     )
-    cand = cand.localCheckpoint(eager=True)
+    cand = materialize(cand)
 
     lam, inv = _MMR_LAMBDA_MILLI, 1000 - _MMR_LAMBDA_MILLI
     sel = None  # (qid, did, snum)
@@ -790,7 +790,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("qid", "did", F.lit(t).cast("long").alias("snum"))
         )
         sel = pick if sel is None else sel.unionAll(pick)
-        sel = sel.localCheckpoint(eager=True)
+        sel = materialize(sel)
 
     return (
         sel.join(cand, ["qid", "did"])

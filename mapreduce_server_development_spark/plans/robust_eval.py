@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.prefix import global_row_number
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1497,7 +1498,7 @@ def q_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     b = {f: _ab_bin(f).format(div="DIV") for f in _AB_FEATS}
-    rows_b = (
+    rows_b = materialize(
         feats.crossJoin(F.broadcast(rng))
         .selectExpr(
             f"{b['qty']} AS b0",
@@ -1509,7 +1510,6 @@ def q_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and every round's 54x candidate fan-out inherits it (a
         # single-file fixture scan would pin it at ~3 tasks).
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
     )
     cand = spark.createDataFrame(
         [(fid, thr, pol) for fid in range(3) for thr in _AB_THRS for pol in (1, -1)],
@@ -1531,11 +1531,10 @@ def q_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "LEAST(GREATEST(CAST(err_w AS DOUBLE) / 1000000000, 1),"
             " CAST(w_total AS DOUBLE) / 1000000000 - 1)",
         )
-        return (
+        return materialize(
             err.orderBy("err_w", "fid", "thr", "pol")
             .limit(1)
             .selectExpr("fid", "thr", "pol", "err_w", "w_total", f"{alpha} AS alpha_e9")
-            .localCheckpoint(eager=True)
         )
 
     ann = rows_b
@@ -2284,7 +2283,7 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda a, x: a + x,
     )
-    scored = (
+    scored = materialize(
         n.crossJoin(F.broadcast(q))
         .filter(F.col("vid") != F.col("qid"))
         .select(
@@ -2293,7 +2292,6 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot / (F.col("qn") * F.col("nrm")), 4).alias("cosv"),
             F.round(dot, 4).alias("dotv"),
         )
-        .localCheckpoint(eager=True)
     )
     wa = Window.partitionBy("qid").orderBy(F.col("cosv").desc(), "vid")
     wb = Window.partitionBy("qid").orderBy(F.col("dotv").desc(), "vid")

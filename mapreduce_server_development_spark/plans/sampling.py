@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -551,7 +552,7 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint per round keeps lineage flat.
     """
     ev = load_table(spark, sf_dir, "events")
-    g = (
+    g = materialize(
         ev.selectExpr(
             "event_type",
             f"((datediff(CAST(ts AS DATE), DATE '{_IPF_MONDAY}')"
@@ -560,14 +561,13 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "dow")
         .agg(F.count("*").cast("long").alias("m"))
         .withColumn("w", F.lit(1.0))
-        .localCheckpoint(eager=True)
     )
-    tgt = g.agg(
+    tgt = materialize(g.agg(
         (
             F.sum("m").cast("double") / F.countDistinct("event_type")
         ).alias("rt"),
         (F.sum("m").cast("double") / F.countDistinct("dow")).alias("ct"),
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(_IPF_ITERS):
         rs = g.groupBy("event_type").agg(
             F.sum(F.col("m").cast("double") * F.col("w")).alias("s")
@@ -585,7 +585,7 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         cs = g.groupBy("dow").agg(
             F.sum(F.col("m").cast("double") * F.col("w")).alias("s")
         )
-        g = (
+        g = materialize(
             g.join(cs, "dow")
             .crossJoin(F.broadcast(tgt))
             .select(
@@ -594,7 +594,6 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "m",
                 (F.col("w") * F.col("ct") / F.col("s")).alias("w"),
             )
-            .localCheckpoint(eager=True)
         )
     return g.selectExpr(*_IPF_FINAL).orderBy("event_type", "dow")
 

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -515,7 +516,6 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.join(F.broadcast(stats), "source")
         .withColumn("rk", F.col("grn") - F.col("t0") + 1)
         .filter(F.col("rk") <= _KMV_K)
-        .localCheckpoint(eager=True)
     )
     per_src = kept.groupBy("source").agg(
         F.max("n_exact").cast("long").alias("exact_distinct"),
@@ -683,14 +683,13 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = orders.select(
         F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("c")
     )
-    bins = (
+    bins = materialize(
         c.selectExpr(
             "CASE WHEN c < 8 THEN c ELSE length(bin(c)) * 8"
             " + (shiftright(c, length(bin(c)) - 4) & 7) END AS bin_id"
         )
         .groupBy("bin_id")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     tot = bins.agg(
         F.sum("cnt").cast("long").alias("n"),
@@ -841,7 +840,7 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho = F.when(w_ == 0, F.lit(_HLL_WBITS + 1)).otherwise(
         F.lit(_HLL_WBITS + 1) - F.length(F.bin(w_))
     )
-    regs = (
+    regs = materialize(
         ud.select("day", h48.alias("h48"))
         .select(
             "day",
@@ -850,7 +849,6 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("day", "reg")
         .agg(F.max("rho").alias("m"))
-        .localCheckpoint(eager=True)
     )
     return _rd_read_off(regs, ud)
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -715,12 +716,12 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; the weight broadcast is O(features), never O(rows).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    d = emb.select(
+    d = materialize(emb.select(
         F.col("embedding")[0].cast("double").alias("x1"),
         F.col("embedding")[1].cast("double").alias("x2"),
         F.col("embedding")[2].cast("double").alias("x3"),
         F.when(F.col("label") % 2 == 0, 0.0).otherwise(1.0).alias("y"),
-    ).localCheckpoint(eager=True)
+    ))
     cnt = d.agg(F.count("*").cast("double").alias("n"))
 
     w = spark.createDataFrame(
@@ -745,7 +746,8 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.sum(resid * F.col("x3")) / F.first("n")).alias("g3"),
             )
         )
-        w = (
+        # 1 row: keeps the lineage flat
+        w = materialize(
             w.crossJoin(F.broadcast(g))
             .select(
                 (F.col("w0") - 1.0 * F.col("g0")).alias("w0"),
@@ -753,7 +755,6 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("w2") - 1.0 * F.col("g2")).alias("w2"),
                 (F.col("w3") - 1.0 * F.col("g3")).alias("w3"),
             )
-            .localCheckpoint(eager=True)  # 1 row: keeps the lineage flat
         )
     # Accuracy pass runs on the SAME 1e-4-rounded weights that the query
     # outputs: the unrounded weights are distributed double sums whose
@@ -2075,7 +2076,7 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CASE WHEN CAST(o_orderdate AS DATE) < DATE '{_PSI_SPLIT}'"
         f" THEN 0 ELSE 1 END AS era",
     )
-    bins = (
+    bins = materialize(
         c.selectExpr(
             "era",
             "CASE WHEN c < 8 THEN c ELSE length(bin(c)) * 8"
@@ -2090,7 +2091,6 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_b"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = bins.agg(
         F.sum("n_a").cast("long").alias("t_a"),
@@ -2177,7 +2177,7 @@ def q_iv_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined pass; the totals join back as a broadcast scalar.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    bins = (
+    bins = materialize(
         li.selectExpr(
             "CAST(round(l_discount * 100) AS BIGINT) AS bucket",
             "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS bad",
@@ -2187,7 +2187,6 @@ def q_iv_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("1 - bad")).cast("long").alias("n_good"),
             F.sum("bad").cast("long").alias("n_bad"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = bins.agg(
         F.sum("n_good").cast("long").alias("t_good"),
@@ -2861,14 +2860,13 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is localCheckpoint'ed per step to keep lineage flat.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = (
+    h = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .selectExpr(f"{_CENTS_SM} AS c")
         .groupBy("c")
         .agg(F.count("*").cast("long").alias("m"))
-        .localCheckpoint(eager=True)
     )
-    tot = h.agg(
+    tot = materialize(h.agg(
         F.sum("m").cast("double").alias("nn"),
         F.sum(F.col("m").cast("decimal(38,0)") * F.col("c"))
         .cast("double")
@@ -2878,7 +2876,7 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("qq"),
-    ).localCheckpoint(eager=True)
+    ))
     params = spark.sql(_GMM_INIT)
     for _ in range(_GMM_ITERS):
         cells = h.crossJoin(F.broadcast(params)).selectExpr(
@@ -2894,9 +2892,8 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * CAST(c AS DOUBLE))"
             ).alias("q1"),
         )
-        params = (
+        params = materialize(
             sums.crossJoin(F.broadcast(tot))
             .selectExpr(*_GMM_UPD)
-            .localCheckpoint(eager=True)
         )
     return params.selectExpr(*_GMM_FINAL)

@@ -27,6 +27,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1665,10 +1666,9 @@ def q_stream_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("day").alias("day"))
     )
     first_seen = _run_to_memory(first_stream, spark, mode="complete")
-    per_day = (
+    per_day = materialize(
         first_seen.groupBy("day")
         .agg(F.count("*").cast("long").alias("new_users"))
-        .localCheckpoint(eager=True)
     )
     b = per_day.select(
         F.col("day").alias("bday"), F.col("new_users").alias("bnew")
@@ -1798,9 +1798,7 @@ def q_stream_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (days x days window map), which trips conflicting-reference
     # resolution against the memory-sink view lineage (the batch twin
     # checkpoints at the same spot).
-    regs = _run_to_memory(regs_stream, spark, mode="complete").localCheckpoint(
-        eager=True
-    )
+    regs = materialize(_run_to_memory(regs_stream, spark, mode="complete"))
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select(
         F.col("ts").cast("date").alias("day"), "user_id"
@@ -1967,7 +1965,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n"))
     )
     cells_long = _run_to_memory(binned, spark, mode="complete")
-    bins = (
+    bins = materialize(
         cells_long.groupBy("bin_id")
         .agg(
             F.sum(F.when(F.col("era") == 0, F.col("n")).otherwise(0))
@@ -1977,7 +1975,6 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_b"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = bins.agg(
         F.sum("n_a").cast("long").alias("t_a"),
@@ -2307,9 +2304,7 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ct"),
         )
     )
-    state = _run_to_memory(models, spark, mode="complete").localCheckpoint(
-        eager=True
-    )
+    state = materialize(_run_to_memory(models, spark, mode="complete"))
     raw = state.select("b", "cr")
     tgt = state.select("b", "ct")
     tot = state.agg(
@@ -2847,13 +2842,12 @@ def q_stream_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.abs(F.col("v") - F.col("med_c")).alias("r")
     )
     wr = Window.partitionBy("event_type").orderBy("r")
-    model = (
+    model = materialize(
         resid.withColumn("rn", F.row_number().over(wr))
         .withColumn("n", F.count("*").over(Window.partitionBy("event_type")))
         .filter(F.expr("rn = LEAST((9 * (n + 1) + 9) DIV 10, n)"))
         .select("event_type", F.col("r").alias("q_hat_c"))
         .join(F.broadcast(med), "event_type")
-        .localCheckpoint(eager=True)
     )
     stream = read_events_stream(spark, sf_dir)
     flags = (
@@ -3018,7 +3012,7 @@ def q_stream_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The static index: bounded (eval sets are small) — pinned once so
     # every micro-batch joins the same relation without recompute.
-    ev2 = ev_grams.join(keep, "gh").localCheckpoint(eager=True)
+    ev2 = materialize(ev_grams.join(keep, "gh"))
 
     _gc_previous_sinks(spark)
     root = tempfile.mkdtemp(prefix="stream_xsd_")
@@ -3168,7 +3162,7 @@ def q_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base, _ = cell_base(emb)
     k = seed_k(base)
-    cent = rank_seed_centroids(base, k).localCheckpoint(eager=True)
+    cent = materialize(rank_seed_centroids(base, k))
 
     _gc_previous_sinks(spark)
     root = tempfile.mkdtemp(prefix="stream_ivfassign_")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col, word_shingles
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -585,7 +586,7 @@ def _xs_g2(spark: SparkSession, sf_dir: str):
     # — the lazy cache lookup was unreliable under the AQE +
     # DSv2(noop)-write path (see tokenizer._merge_rounds), and the
     # checkpoint also truncates the gram lineage.
-    return toks, grams.join(keep, "gh").localCheckpoint(eager=True)
+    return toks, materialize(grams.join(keep, "gh"))
 
 
 def _xs_spans(spark: SparkSession, sf_dir: str):
@@ -1141,7 +1142,7 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("gh")
     )
     # r11: eager checkpoint, not lazy persist (see _xs_g2 note)
-    g2 = gs.join(keep, "gh").localCheckpoint(eager=True)
+    g2 = materialize(gs.join(keep, "gh"))
     ev = g2.filter(F.col("split") == "test").select(
         "gh", F.col("doc").alias("ta"), F.col("pos").alias("pa")
     )
@@ -1593,7 +1594,7 @@ def q_exact_substring_incremental_indexed(
         "doc_id", "source", tokens_col(F.lower(F.col("text"))).alias("toks"),
         is_new.alias("is_new"),
     )
-    grams_new = (
+    grams_new = materialize(
         toks.filter("is_new")
         .select(
             F.col("doc_id").alias("doc"),
@@ -1602,7 +1603,6 @@ def q_exact_substring_incremental_indexed(
             ),
         )
         .select("doc", "pos", F.substring(F.md5("gram"), 1, 16).alias("gh"))
-        .localCheckpoint(eager=True)
     )
     stats_new = grams_new.groupBy("gh").agg(
         F.count("*").alias("c_new"),
@@ -1623,7 +1623,7 @@ def q_exact_substring_incremental_indexed(
         .filter((F.col("c") <= _XS_HOT) & (F.col("d0") != F.col("d1")))
         .select("gh")
     )
-    g2_new = grams_new.join(keep, "gh").localCheckpoint(eager=True)
+    g2_new = materialize(grams_new.join(keep, "gh"))
     # settled postings narrowed to the ARRIVAL batch's kept gram keys
     # before pairing — the index scan is the only settled-side cost
     new_keys = g2_new.select("gh").distinct()

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.prefix import global_row_number
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -112,14 +113,13 @@ def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a window or a sort.
     """
     orders = load_table(spark, sf_dir, "orders")
-    daily = (
+    daily = materialize(
         orders.groupBy(
             F.expr(
                 "datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01')"
             ).alias("t")
         )
         .agg(F.expr(f"CAST(SUM({_CENTS}) AS BIGINT)").alias("x"))
-        .localCheckpoint(eager=True)
     )
     st = daily.agg(
         F.expr("CAST(COUNT(*) AS DECIMAL(38,0))").alias("n"),
@@ -215,7 +215,7 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     broken by (mi, mj) so both engines pick identical middles.
     """
     orders = load_table(spark, sf_dir, "orders")
-    monthly = (
+    monthly = materialize(
         orders.groupBy(
             F.expr(
                 "CAST(year(CAST(o_orderdate AS DATE)) * 12"
@@ -223,11 +223,10 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m")
         )
         .agg(F.expr(f"CAST(SUM({_CENTS}) AS BIGINT)").alias("y"))
-        .localCheckpoint(eager=True)
     )
     a = monthly.select(F.col("m").alias("mi"), F.col("y").alias("yi"))
     b = monthly.select(F.col("m").alias("mj"), F.col("y").alias("yj"))
-    pairs = (
+    pairs = materialize(
         a.join(F.broadcast(b), F.col("mi") < F.col("mj"))
         .select(
             "mi",
@@ -236,7 +235,6 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(yj - yi AS DOUBLE) / CAST(mj - mi AS DOUBLE)"
             ).alias("slope"),
         )
-        .localCheckpoint(eager=True)
     )
     ranked = global_row_number(pairs, ["slope", "mi", "mj"], out_col="rn")
     cnt = pairs.agg(
@@ -334,7 +332,7 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stats_ml import _corr_formula
 
     li = load_table(spark, sf_dir, "lineitem")
-    daily = (
+    daily = materialize(
         li.groupBy(
             F.expr(
                 "datediff(CAST(l_shipdate AS DATE), DATE '1992-01-01')"
@@ -350,7 +348,6 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(round(l_quantity) AS BIGINT)) AS BIGINT)"
             ).alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
     b = daily.select(
         F.col("t").alias("u"),
@@ -422,12 +419,11 @@ def q_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     then |days| rows; everything downstream is calendar-bounded.
     """
     ev = load_table(spark, sf_dir, "events")
-    per_day = (
+    per_day = materialize(
         ev.groupBy("user_id")
         .agg(F.min(F.col("ts").cast("date")).alias("day"))
         .groupBy("day")
         .agg(F.count("*").cast("long").alias("new_users"))
-        .localCheckpoint(eager=True)
     )
     b = per_day.select(
         F.col("day").alias("bday"), F.col("new_users").alias("bnew")
@@ -593,7 +589,7 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums (1 row) broadcast back; no window, no data-scale state.
     """
     orders = load_table(spark, sf_dir, "orders")
-    daily = (
+    daily = materialize(
         orders.groupBy(
             F.expr("CAST(o_orderdate AS DATE)").alias("day"),
             F.expr(
@@ -602,7 +598,6 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dow"),
         )
         .agg(F.expr(f"CAST(SUM({_CENTS}) AS DECIMAL(38,0))").alias("rev_c"))
-        .localCheckpoint(eager=True)
     )
     by_dow = daily.groupBy("dow").agg(
         F.count("*").cast("long").alias("n_days"),
@@ -696,7 +691,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     range join; no WindowExec, no sequential state.
     """
     orders = load_table(spark, sf_dir, "orders")
-    daily = (
+    daily = materialize(
         orders.groupBy(
             F.expr(
                 "datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01')"
@@ -704,7 +699,6 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(o_orderdate AS DATE)").alias("day"),
         )
         .agg(F.expr(f"CAST(SUM({_CENTS}) AS BIGINT)").alias("rev_c"))
-        .localCheckpoint(eager=True)
     )
     w = F.array(*[F.lit(x) for x in _EWMA_W])
     b = daily.select(
@@ -856,7 +850,7 @@ def q_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     series; two broadcast-able self-joins; one scalar broadcast.
     """
     orders = load_table(spark, sf_dir, "orders")
-    daily = (
+    daily = materialize(
         orders.groupBy(
             F.expr(
                 "datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01')"
@@ -864,7 +858,6 @@ def q_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(o_orderdate AS DATE)").alias("day"),
         )
         .agg(F.expr(f"CAST(SUM({_CENTS}) AS BIGINT)").alias("rev_c"))
-        .localCheckpoint(eager=True)
     )
     m = daily.agg(
         F.sum(F.col("rev_c").cast("decimal(38,0)")).alias("tot"),
@@ -1070,7 +1063,7 @@ def q_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is calendar × 7 bounded.
     """
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
+    hourly = materialize(
         ev.select(F.date_trunc("hour", "ts").alias("hr"), "event_type")
         .groupBy("hr")
         .agg(
@@ -1081,7 +1074,6 @@ def q_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
     lags = spark.range(-_CC_MAXLAG, _CC_MAXLAG + 1).selectExpr(
         "CAST(id AS INT) AS lag"

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col, word_shingles
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -119,7 +120,7 @@ def _merge_rounds(
         # vocab-scale round exactly once and truncates the lineage.
         # Its blocks are RDD-level: DataFrame.unpersist() does not free
         # them; session.release_checkpoints does, between queries.
-        w = w.localCheckpoint(eager=True)
+        w = materialize(w)
     return w, merges
 
 

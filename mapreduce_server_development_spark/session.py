@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_parallelism() -> int:
@@ -74,11 +74,9 @@ def spark_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
         # (BENCH_AB.json overhead_ab; the "fewer tasks" direction,
         # parallelismFirst=false, measured 2-3x WORSE and is rejected
         # there). On a cluster real partitions sit far above either
-        # floor, so the setting is inert at 100 TB; env-overridable for
-        # deployments that want the stock 1m.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-            "SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"
-        ),
+        # floor, so the setting is inert at 100 TB; an A/B arm varies it
+        # through its ``confs`` (tools/ab.py overhead_ab).
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -113,27 +111,38 @@ def get_spark(
     return spark
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df`` now and return a frame that reads its stored rows:
+    the engine's only checkpoint. It cuts the plan where a relation is
+    read more than once, where an iteration's lineage would otherwise
+    grow, or where a value must be pinned (a nondeterministic draw, a
+    memory-sink snapshot, a repartitioning). Each call is one eager
+    Spark job whose blocks live in the executors' block managers until
+    ``release_checkpoints`` frees them (SCALE.md "Local checkpoints").
+    """
+    return df.localCheckpoint(eager=True)
+
+
 def release_checkpoints(spark: SparkSession) -> int:
     """Drop every RDD-level persisted block in the session — including
-    ``localCheckpoint`` blocks, which ``spark.catalog.clearCache()``
-    does NOT touch (it only clears the SQL CacheManager).
+    the ``materialize`` blocks, which ``spark.catalog.clearCache()``
+    does NOT touch (it only clears the SQL CacheManager). This is the
+    only release; it is global, not scoped to one query.
 
-    The engine materializes multi-consumer intermediates with eager
-    ``localCheckpoint`` (plans/, functions/ — see SCALE.md "Local
-    checkpoints"); those blocks are only reclaimed when the Python
-    DataFrame is garbage-collected, so a long-lived session running
-    many queries (the bench sweep, the daemon) accumulates dead blocks
-    in the block manager — disk + GC pressure that drifts later
-    queries' timings (round-11 ADVICE bench.py:127 / corpus_stats.py
-    :947). Call this BETWEEN queries, after the previous query's
-    result is fully consumed.
+    Those blocks are otherwise only reclaimed when the Python DataFrame
+    is garbage-collected, so a long-lived session running many queries
+    (the bench sweep, the daemon) accumulates dead blocks in the block
+    manager — disk + GC pressure that drifts later queries' timings.
+    Call this BETWEEN queries, after the previous query's result is
+    fully consumed.
 
     Hazard (by design): unpersisting a lineage-truncated checkpoint
     destroys its only data copy — a retained DataFrame from a previous
-    invocation must never be re-executed afterwards (it would fail
-    with "checkpoint block not found", not silently recompute). Every
-    in-repo caller (bench.py, daemon job loop) consumes results fully
-    before releasing. Returns the number of RDDs unpersisted.
+    invocation must never be re-executed afterwards. It fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, it does not silently
+    recompute (tests/test_tools.py). Every in-repo caller (bench.py,
+    the daemon job loop, tools/ab.py) consumes results fully before
+    releasing. Returns the number of RDDs unpersisted.
     """
     try:
         jrdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())

@@ -425,16 +425,17 @@ def test_hits_rounds_are_equijoins_no_wedges(spark):
     """The visible q_hits plan (post-checkpoint segment) must take its
     top-10s as partial heaps and keep the only nested-loop joins as
     the 1-row broadcast max-normalizers; the per-round edge joins are
-    behind localCheckpoint barriers, so the half-round shape is pinned
+    behind materialize barriers, so the half-round shape is pinned
     separately on the un-checkpointed inner relation."""
     plan = _plan(spark, "q_hits")
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan
     # The half-round inflow (edges ⋈ scores → per-vertex sum) must be a
-    # hash equi-join feeding a partial aggregate — built here without
-    # the checkpoints so the shape is visible.
+    # hash equi-join feeding a partial aggregate — the kernel's inflow,
+    # built here without the checkpoints so the shape is visible.
     from pyspark.sql import functions as F
 
+    from mapreduce_server_development_spark.functions.graph import _inflow
     from mapreduce_server_development_spark.sources.tables import load_table
 
     li = load_table(spark, SF_SMOKE, "lineitem")
@@ -445,13 +446,9 @@ def test_hits_rounds_are_equijoins_no_wedges(spark):
         .distinct()
     )
     h = bought.select("c").distinct().select(
-        "c", F.lit(1_000_000).cast("long").alias("h")
+        "c", F.lit(1_000_000).cast("long").alias("score")
     )
-    half = (
-        bought.join(h, "c")
-        .groupBy("p")
-        .agg(F.expr("SUM(CAST(h AS DECIMAL(38,0)))").alias("s"))
-    )
+    half = _inflow(bought, h, "c", "p", None)
     p2 = half._sc._jvm.PythonSQLUtils.explainString(
         half._jdf.queryExecution(), "formatted"
     )

@@ -1,9 +1,12 @@
 """The measurement tools share the engine's session config and one
 measurement path: tools/ab.py (A/B arms, each in a fresh process) and
-tools/stress.py (disjoint-key replication of a fixture)."""
+tools/stress.py (disjoint-key replication of a fixture). The engine has
+one checkpoint producer, ``session.materialize``, and one release,
+``session.release_checkpoints``."""
 
 from __future__ import annotations
 
+import ast
 import json
 import sys
 from pathlib import Path
@@ -19,6 +22,43 @@ def test_spark_config_only_in_session():
     sources = [*sorted((REPO / "tools").glob("*.py")), REPO / "bench.py"]
     offenders = [p.name for p in sources if '.config("spark.' in p.read_text()]
     assert offenders == []
+
+
+def test_local_checkpoint_only_in_materialize():
+    pkg = REPO / "mapreduce_server_development_spark"
+    calls = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner[node] = fn.name  # innermost function wins
+        calls += [
+            (path.relative_to(pkg).as_posix(), owner.get(node), node.lineno)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "localCheckpoint"
+        ]
+    assert [(p, fn) for p, fn, _ in calls] == [("session.py", "materialize")], calls
+
+
+def test_released_checkpoint_fails_loudly(spark):
+    from pyspark.sql import functions as F
+
+    from mapreduce_server_development_spark.session import (
+        materialize,
+        release_checkpoints,
+    )
+
+    df = materialize(spark.range(100).groupBy((F.col("id") % 7).alias("k")).count())
+    assert df.count() == 7
+    assert release_checkpoints(spark) >= 1
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    # The checkpoint was the frame's only copy: re-reading it fails,
+    # it does not silently recompute.
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        df.collect()
 
 
 def test_get_spark_applies_spark_confs(spark):
@@ -72,11 +112,13 @@ def test_ab_arms_agree_on_result(tmp_path):
 
     book = tmp_path / "book.json"
     arms = {"base": {}, "minpart1m": {"confs": {ab._MINPART: "1m"}}}
-    entry = ab.run_ab(arms, ["q1_pricing_summary"], SF_SMOKE, "overhead_ab", book=book)
-    recs = [entry["results"][a]["queries"]["q1_pricing_summary"] for a in arms]
-    assert all("error" not in r for r in recs), recs
-    assert recs[0]["md5"] == recs[1]["md5"] and recs[0]["rows"] > 0
-    assert recs[0]["runs"][0]["jobs"] > 0 and recs[0]["runs"][0]["tasks"] > 0
+    queries = ["q1_pricing_summary", "q6_forecast_revenue"]
+    entry = ab.run_ab(arms, queries, SF_SMOKE, "overhead_ab", book=book)
+    for q in queries:
+        recs = [entry["results"][a]["queries"][q] for a in arms]
+        assert all("error" not in r for r in recs), recs
+        assert recs[0]["md5"] == recs[1]["md5"] and recs[0]["rows"] > 0
+        assert recs[0]["runs"][0]["jobs"] > 0 and recs[0]["runs"][0]["tasks"] > 0
     assert json.loads(book.read_text())["overhead_ab"] == [entry]
 
 
@@ -85,9 +127,8 @@ def test_ab_fails_when_digests_disagree(tmp_path, monkeypatch):
 
     digests = iter(["aaa", "bbb"])
     monkeypatch.setattr(ab, "run_arm", lambda *a: {
-        "session_s": 0.0,
-        "queries": {"q": {"runs": [{"sec": 0.0, "jobs": 1, "stages": 1, "tasks": 1,
-                                    "spill_bytes": 0}], "rows": 1, "md5": next(digests)}},
+        "session_s": 0.0, "rows": 1, "md5": next(digests),
+        "runs": [{"sec": 0.0, "jobs": 1, "stages": 1, "tasks": 1, "spill_bytes": 0}],
     })
     book = tmp_path / "book.json"
     book.write_text(json.dumps({"k": {"earlier": 1}}))

@@ -1,4 +1,5 @@
-"""A/B harness: time queries under named arms, each arm in a fresh process.
+"""A/B harness: time queries under named arms, each (arm, query) in a
+fresh process.
 
 An arm is a dict with three optional keys:
 
@@ -11,12 +12,15 @@ An arm is a dict with three optional keys:
   Python).
 
 Session confs are fixed per JVM, so each arm runs in a fresh child
-process (``python tools/ab.py --child SPEC``). Per query the child times
-``runs`` runs; each builds the query and runs its action inside the
-timer, under its own job group, and reads jobs, stages, tasks, executor
-time, GC, shuffle and spill for that group from the Spark status store
+process (``python tools/ab.py --child SPEC``), and each query gets its
+own child: one JVM running many queries outgrows the status store,
+which evicts old stages (``read_stages`` then fails after about 2,000).
+The arms alternate per query. The child times ``runs`` runs; each
+builds the query and runs its action inside the timer, under its own
+job group, and reads jobs, stages, tasks, executor time, GC, shuffle
+and spill for that group from the Spark status store
 (``perfbench.measure.read_stages``/``totals``). The first run is the
-arm's cold run. After the timed runs the child collects the result once,
+cold run. After the timed runs the child collects the result once,
 outside the timer, and records the md5 of its canonical rows
 (``oracle_compare.canon_rows``). Arms whose digests disagree fail the
 experiment: no arm may change a result.
@@ -145,31 +149,28 @@ def append_book(book: Path, key: str, entry: dict) -> None:
 
 
 def child(spec: dict) -> dict:
-    """One arm in this (fresh) process: build the session, time every
-    query, digest its result."""
+    """One arm and one query in this (fresh) process: build the session,
+    time the query's runs, digest its result."""
     import __spark_entry__ as entrymod
 
     from mapreduce_server_development_spark.session import get_spark
 
     t0 = time.perf_counter()
     spark = get_spark(app_name="ab", overrides=spec["confs"])
-    out = {"session_s": round(time.perf_counter() - t0, 2), "queries": {}}
-    queries = entrymod.queries()
-    sf_dir = spec["sf_dir"]
-    for name in spec["queries"]:
-        fn = queries[name]
-        try:
-            runs = [measure(spark, name, lambda: fn(spark, sf_dir), spec["action"])
-                    for _ in range(spec["runs"])]
-            out["queries"][name] = {"runs": runs, **digest(spark, fn(spark, sf_dir))}
-        except Exception as e:  # noqa: BLE001 - recorded, and fails the compare
-            out["queries"][name] = {"error": f"{type(e).__name__}: {e}"[:300]}
-    return out
+    out = {"session_s": round(time.perf_counter() - t0, 2)}
+    name, sf_dir = spec["query"], spec["sf_dir"]
+    fn = entrymod.queries()[name]
+    try:
+        runs = [measure(spark, name, lambda: fn(spark, sf_dir), spec["action"])
+                for _ in range(spec["runs"])]
+        return {**out, "runs": runs, **digest(spark, fn(spark, sf_dir))}
+    except Exception as e:  # noqa: BLE001 - recorded, and fails the compare
+        return {**out, "error": f"{type(e).__name__}: {e}"[:300]}
 
 
-def run_arm(arm: dict, queries: list[str], sf_dir: str, runs: int) -> dict:
+def run_arm(arm: dict, query: str, sf_dir: str, runs: int) -> dict:
     spec = {"confs": arm.get("confs", {}), "action": arm.get("action", "noop"),
-            "queries": queries, "sf_dir": sf_dir, "runs": runs}
+            "query": query, "sf_dir": sf_dir, "runs": runs}
     proc = subprocess.run(
         [sys.executable, __file__, "--child", json.dumps(spec)],
         env={**os.environ, **arm.get("env", {})},
@@ -197,18 +198,18 @@ def run_ab(arms: dict[str, dict], queries: list[str], sf_dir: str, key: str | No
     """Run every arm, append the record to ``book`` under ``key`` (under
     each query's own key when ``key`` is None), and raise if the arms'
     result digests disagree."""
-    results = {}
-    for name, arm in arms.items():
-        results[name] = res = run_arm(arm, queries, sf_dir, runs)
-        print(f"--- {name} {arm} (session {res['session_s']}s)", flush=True)
-        for q, rec in res["queries"].items():
+    results = {name: {"queries": {}} for name in arms}
+    for q in queries:
+        for name, arm in arms.items():
+            rec = results[name]["queries"][q] = run_arm(arm, q, sf_dir, runs)
             if "error" in rec:
-                print(f"  {q}: ERROR {rec['error']}", flush=True)
+                print(f"{q} [{name}]: ERROR {rec['error']}", flush=True)
                 continue
             last = rec["runs"][-1]
-            print(f"  {q}: {[r['sec'] for r in rec['runs']]}s jobs {last['jobs']} "
+            print(f"{q} [{name}]: {[r['sec'] for r in rec['runs']]}s jobs {last['jobs']} "
                   f"stages {last['stages']} tasks {last['tasks']} spill "
-                  f"{last['spill_bytes']} rows {rec['rows']} md5 {rec['md5']}", flush=True)
+                  f"{last['spill_bytes']} rows {rec['rows']} md5 {rec['md5']} "
+                  f"(session {rec['session_s']}s)", flush=True)
     mismatches = digest_mismatches(results)
     entry = {"arms": arms, "queries": queries, "sf_dir": sf_dir, "runs": runs,
              "cpus": os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())),
