@@ -55,6 +55,64 @@ def _as_double(col):
     return F.col(col).cast("array<double>")
 
 
+def nearest(
+    points: DataFrame,
+    book: DataFrame,
+    score,
+    key: tuple[str, ...] = (),
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Nearest codeword per point: ``(vid, *key, cid, score, *carry)``.
+
+    ``points`` (keyed by ``vid``) meet the broadcast ``book`` (keyed by
+    ``cid``) in a cross join, or an equi-join on ``key`` (PQ's
+    subspace ``m``). ``score`` is a Column over both sides; the highest
+    wins and a tie goes to the lowest ``cid``. L2 callers pass the
+    negated e4 integer distance, which is exact for longs. ``carry``
+    names point columns kept on the output row.
+
+    The pick is a map-side-combinable ``max_by`` aggregate, not a
+    window: the broadcast join keeps every candidate row of a point in
+    one task, so the partial aggregate collapses |book| rows to one
+    BEFORE the exchange (a window shuffles all n x |book| rows; measured
+    dominant at 100x vectors)."""
+    pairs = (
+        points.join(F.broadcast(book), list(key))
+        if key
+        else points.crossJoin(F.broadcast(book))
+    )
+    return (
+        pairs.withColumn("score", score)
+        .groupBy("vid", *key)
+        .agg(
+            F.expr("max_by(cid, struct(score, -cid))").alias("cid"),
+            F.max("score").alias("score"),
+            *[F.first(c).alias(c) for c in carry],
+        )
+    )
+
+
+def lloyd_step(
+    assign: DataFrame, vec: str, key: tuple[str, ...] = ()
+) -> DataFrame:
+    """One Lloyd (k-means) re-fit: ``(*key, cid, cv)``, each codeword
+    the per-dimension mean of its members' ``vec``. Means round to 6
+    decimals so every engine trains bit-identical centroids (the mean's
+    last ulp depends on summation order); a codeword with no member
+    drops. The (key, cid, dim)-keyed aggregate is fully distributed and
+    its output is the bounded codebook."""
+    dm = (
+        assign.select(*key, "cid", F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*key, "cid", "pos")
+        .agg(F.round(F.avg("val"), 6).alias("mu"))
+    )
+    return (
+        dm.groupBy(*key, "cid")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "mu"))).alias("pm"))
+        .select(*key, "cid", F.transform("pm", lambda s: s["mu"]).alias("cv"))
+    )
+
+
 def _spread(emb):
     """Round-robin repartition to defaultParallelism. Every entry point
     here computes expensive per-row expressions (signatures, dots) or
@@ -124,13 +182,12 @@ def ivf_topk(
 
     Initial centroids are the vectors with id <= ``nlist`` — a
     deterministic seed the oracle reproduces exactly. ``train_iters``
-    runs that many Lloyd (k-means) refinement passes: assign every
-    vector to its nearest centroid, replace each centroid with its
-    cell's per-dimension mean. Means are rounded to 6 decimals so both
-    engines train bit-identical centroids (the mean's last-ulp depends
-    on summation order). Each pass is one corpus scan + a
-    (cell, dim)-keyed aggregation — fully distributed, centroids stay
-    a bounded nlist-row broadcast. Scale shape: assignment is a
+    runs that many Lloyd (k-means) refinement passes: :func:`nearest`
+    assigns every vector to its max-cosine centroid, :func:`lloyd_step`
+    replaces each centroid with its cell's 6-decimal per-dimension
+    mean. Each pass is one corpus scan + a (cell, dim)-keyed
+    aggregation — fully distributed, centroids stay a bounded
+    nlist-row broadcast. Scale shape: assignment is a
     broadcast join vs ``nlist`` bounded centroids (one corpus scan);
     the probe join touches ~``nprobe/nlist`` of the corpus — never
     all-pairs. Returns (query_id, vec_id, cosine, rank).
@@ -143,36 +200,11 @@ def ivf_topk(
         F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
     )
     ccos = F.lit(0.0) + F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")), 4)
-    wa = Window.partitionBy("vid").orderBy(F.col("ccos").desc(), F.col("cid"))
-
-    def _assign(centroids: DataFrame) -> DataFrame:
-        return (
-            base.crossJoin(F.broadcast(centroids))
-            .select("vid", "cid", ccos.alias("ccos"))
-            .withColumn("rn", F.row_number().over(wa))
-            .filter(F.col("rn") == 1)
-            .select("vid", "cid")
-        )
-
     for _ in range(train_iters):
-        # Lloyd pass: per-dimension cell means (rounded for cross-engine
-        # determinism) become the next centroids; empty cells drop out.
-        members = _assign(cent).join(base.select("vid", "v"), "vid")
-        dim_means = (
-            members.select("cid", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-        )
-        cent = (
-            dim_means.groupBy("cid")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm")
-            )
-            .select("cid", F.transform(F.col("pm"), lambda s: s["m"]).alias("cv"))
-            .withColumn("cnrm", _norm(F.col("cv")))
-        )
+        members = nearest(base, cent, ccos, carry=("v",))
+        cent = lloyd_step(members, "v").withColumn("cnrm", _norm(F.col("cv")))
 
-    assign = _assign(cent)
+    assign = nearest(base, cent, ccos).select("vid", "cid")
     probe = (
         base.filter(F.col("vid") <= query_max_id)
         .crossJoin(F.broadcast(cent))
@@ -356,7 +388,6 @@ def semantic_dedup_flags(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_cell_size: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication flags (Abbas et al. 2023,
     arXiv:2303.09540): coarse-cluster the embedding space, then mark as
@@ -371,50 +402,25 @@ def semantic_dedup_flags(
     ``ivf_topk(train_iters=...)`` for production quality). The
     pairwise stage is an equi-join on the cluster id — quadratic only
     WITHIN a cell, never across the corpus. At 100 TB, cell population
-    is held bounded by growing nlist ~ sqrt(n) (FAISS practice), and
-    ``max_cell_size`` adds the hot-cell cap (same broadcast anti-join
-    as dedup.py's hot-bucket prunes): cells above the cap skip the
-    pairwise stage entirely (their members are never flagged — the
-    documented recall tradeoff of every hot-bucket prune here).
-    Library default ``None`` = exhaustive, no silent recall change.
+    is held bounded by growing nlist ~ sqrt(n) (FAISS practice). Hot
+    cells are not capped here: the sqrt(n)-cell family
+    (``plans/cell_common``) bounds them with its deterministic
+    (cid, sub) split, which keeps every member.
 
     Returns one row per vector: (vec_id, cid, is_dup 0/1).
     """
-    from pyspark.sql.window import Window
-
     base = _spread(emb).select(F.col(id_col).alias("vid"), _as_double(vec_col).alias("v"))
     base = base.withColumn("nrm", _norm(F.col("v")))
     cent = base.filter(F.col("vid") <= nlist).select(
         F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
     )
     ccos = F.lit(0.0) + F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")), 4)
-    assign = (
-        base.crossJoin(F.broadcast(cent))
-        .select("vid", "cid", ccos.alias("ccos"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vid").orderBy(F.col("ccos").desc(), F.col("cid"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vid", "cid")
-        .join(base, "vid")
-    )
-    pairwise_src = assign
-    if max_cell_size is not None:
-        hot = (
-            assign.groupBy("cid")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > max_cell_size)
-            .select("cid")
-        )
-        pairwise_src = assign.join(F.broadcast(hot), "cid", "left_anti")
-    a = pairwise_src.select(
+    assign = nearest(base, cent, ccos, carry=("v", "nrm"))
+    a = assign.select(
         F.col("cid"), F.col("vid").alias("id_a"), F.col("v").alias("va"),
         F.col("nrm").alias("na"),
     )
-    b = pairwise_src.select(
+    b = assign.select(
         F.col("cid"), F.col("vid").alias("id_b"), F.col("v").alias("vb"),
         F.col("nrm").alias("nb"),
     )

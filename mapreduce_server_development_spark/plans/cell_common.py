@@ -34,11 +34,14 @@ text so correctness checks stay exact:
    (vid arithmetic) in both engines.
 
 3. **Lloyd refinement (optional).** ``train_iters`` k-means passes
-   re-fit the seed centroids: per-dimension cell means rounded to 6
-   decimals (both engines train bit-identical centroids — the mean's
-   last ulp depends on summation order), then one reassignment scan.
-   Each pass is a (cell, dim)-keyed aggregate over the corpus plus a
-   broadcast-centroid scan — fully distributed; empty cells drop.
+   re-fit the seed centroids with the package's one vector-quantization
+   kernel, ``functions/similarity``: ``lloyd_step`` takes per-dimension
+   cell means rounded to 6 decimals (both engines train bit-identical
+   centroids — the mean's last ulp depends on summation order), then
+   ``nearest`` runs one reassignment scan (a map-side ``max_by``, not
+   a window). Each pass is a (cell, dim)-keyed aggregate over the
+   corpus plus a broadcast-centroid scan — fully distributed; empty
+   cells drop.
    Training also ATTACKS the hot-cell problem at the source: Lloyd
    iterations move centroids toward dense regions, flattening the
    population skew the split otherwise absorbs (q_cell_quantizer_train
@@ -62,8 +65,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.similarity import _as_double, _dot, _norm, lloyd_step, nearest
 
 #: Default hot-cell tolerance: a cell may hold up to CAP_MULT times
 #: the uniform sqrt(n) mean before it shards. 4x keeps natural
@@ -72,69 +77,15 @@ from pyspark.sql import functions as F
 CELL_CAP_MULT = 4.0
 
 
-def _as_double_vec(col: str = "embedding") -> Column:
-    return F.transform(F.col(col), lambda x: x.cast("double"))
-
-
-def _norm(col: str = "vv") -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(F.col(col), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def _dot(a: str, b: str) -> Column:
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _argmax_assign(
-    base: DataFrame, cent: DataFrame, extra_out: tuple[str, ...]
+def assign_cells(
+    base: DataFrame, cent: DataFrame, extra_out: tuple[str, ...] = ()
 ) -> DataFrame:
     """Assign every base vector to its max-cosine centroid (4-decimal
-    rounds, lowest-cid tie-break). Argmax is a map-side-combinable
-    ``max_by`` aggregate, NOT a window: the broadcast join keeps every
-    candidate row of a vector in one task, so the partial max_by
-    collapses |centroids| rows to 1 BEFORE the exchange (a window
-    would shuffle n x sqrt(n) rows each carrying two 64-float
-    arrays — measured dominant at 100x vectors, round 7)."""
+    rounds, lowest-cid tie-break) with :func:`nearest`:
+    ``(vid, *extra_out, cid, vv, nrm, ccos)``."""
     ccos = F.round(_dot("vv", "cv") / (F.col("nrm") * F.col("cnrm")), 4)
-    return (
-        base.crossJoin(F.broadcast(cent))
-        .withColumn("ccos", ccos)
-        .groupBy("vid")
-        .agg(
-            F.expr("max_by(cid, struct(ccos, -cid))").alias("cid"),
-            F.max("ccos").alias("ccos"),
-            F.first("vv").alias("vv"),
-            F.first("nrm").alias("nrm"),
-            *[F.first(c).alias(c) for c in extra_out],
-        )
-        .select("vid", *extra_out, "cid", "vv", "nrm", "ccos")
-    )
-
-
-def _lloyd_centroids(assign: DataFrame) -> DataFrame:
-    """One Lloyd pass: per-dimension cell means (rounded to 6 decimals
-    for cross-engine determinism) become the next centroids; empty
-    cells drop out. (cell, dim)-keyed aggregate — fully distributed,
-    output stays a bounded ~k-row centroid panel."""
-    dm = (
-        assign.select("cid", F.posexplode("vv").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("mu"))
-    )
-    return (
-        dm.groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "mu"))).alias("pm"))
-        .select("cid", F.transform(F.col("pm"), lambda s: s["mu"]).alias("cv"))
-        .withColumn("cnrm", _norm("cv"))
+    return nearest(base, cent, ccos, carry=(*extra_out, "vv", "nrm")).select(
+        "vid", *extra_out, "cid", "vv", "nrm", F.col("score").alias("ccos")
     )
 
 
@@ -162,7 +113,7 @@ def cell_base(
     # summation-order-rounded).
     spread = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
     base = spread.select(
-        F.col("vec_id").alias("vid"), *exprs, _as_double_vec().alias("vv")
+        F.col("vec_id").alias("vid"), *exprs, _as_double("embedding").alias("vv")
     ).withColumn("nrm", _norm("vv"))
     return base, tuple(extra_out)
 
@@ -203,10 +154,10 @@ def cell_assign_stages(
     only the LAST stage (cell_assign) leave it None — there the chain
     is evaluated once and a checkpoint would only add job boundaries."""
     fix = materialize if materialize is not None else (lambda df: df)
-    stages = [fix(_argmax_assign(base, cent, extra_out))]
+    stages = [fix(assign_cells(base, cent, extra_out))]
     for _ in range(train_iters):
-        cent = _lloyd_centroids(stages[-1])
-        stages.append(fix(_argmax_assign(base, cent, extra_out)))
+        cent = lloyd_step(stages[-1], "vv").withColumn("cnrm", _norm("cv"))
+        stages.append(fix(assign_cells(base, cent, extra_out)))
     return stages
 
 

@@ -30,11 +30,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.similarity import _dot
+from ..functions.similarity import _dot, lloyd_step, nearest
 from ..functions.text import tokens_col, word_shingles
 from ..session import materialize
 from ..sources.tables import load_table
-from .cell_common import cell_assign, cell_ctes
+from .cell_common import (
+    assign_cells,
+    cell_assign,
+    cell_assign_stages,
+    cell_base,
+    cell_ctes,
+    rank_seed_centroids,
+    seed_k,
+    with_hot_cell_split,
+)
 from .registry import query
 from .sampling import _bucket_sql, hash_bucket
 
@@ -503,17 +512,8 @@ def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long")
         )
 
-    enc = (
-        sub.join(F.broadcast(cent), "m")
-        .withColumn("d2", d2_e4("sv", "cv"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vid", "m").orderBy("d2", "cid")
-            ),
-        )
-        .filter("rn = 1")
-        .select("vid", "m", "cid")
+    enc = nearest(sub, cent, -d2_e4("sv", "cv"), key=("m",)).select(
+        "vid", "m", "cid"
     )
     q = v.filter((F.col("vid") % 97 == 3) & (F.col("vid") < 1000)).select(
         F.col("vid").alias("qid"), F.col("vv").alias("qv")
@@ -657,7 +657,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact escape hatch).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = _cell_assign(emb, extra=("label",))
+    assign = cell_assign(emb, extra=("label",))
     a = assign.select(
         "cid", "sub", "vid", "label",
         F.col("vv").alias("va"), F.col("nrm").alias("na"),
@@ -716,12 +716,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the measured optimum of the bit-exact forms; a production
 #: deployment that relaxes engine-replayable exactness uses the
 #: batched-gemm quantizer (q_ivf_kmeans_ann) instead.
-
-
-#: The shared implementation now lives in plans/cell_common.py (rank
-#: seeds + hot-cell split + optional Lloyd training); this alias keeps
-#: the family call sites and tests stable.
-_cell_assign = cell_assign
 
 
 # ---------------------------------------------------------------------------
@@ -799,7 +793,7 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; nothing is all-pairs.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = _cell_assign(
+    assign = cell_assign(
         emb,
         extra=(
             (
@@ -922,7 +916,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt(n)-row panels.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = _cell_assign(emb, extra=()).select("vid", "cid")
+    assign = cell_assign(emb, extra=()).select("vid", "cid")
     tot = assign.agg(
         F.count("*").cast("long").alias("n"),
         F.countDistinct("cid").cast("long").alias("ncells"),
@@ -1594,9 +1588,18 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     ``(assign, cent, cb1, enc, q, ms, exact)``; q_ivfpq_ann builds
     the single-probe ADC on top, q_ivfpq_nprobe_curve the
     multi-probe ADC — both quantize with the IDENTICAL codebook."""
-    from .cell_common import cell_base, rank_seed_centroids, seed_k
-
     emb = load_table(spark, sf_dir, "embeddings")
+    # The seed population is counted once: k and the rank-seed centroid
+    # panel serve both the cell assignment and the residuals below.
+    # Residual encoding (Jegou et al. 2011 sec. V): PQ quantizes
+    # v - centroid(cell(v)). The centroid panel is the rank-seed
+    # vectors — ~sqrt(n) rows, broadcast; deterministic (no mean).
+    # Checkpointed: it is re-read by the assignment, the residual join,
+    # every probe's query-residual join, and the ADC LUTs — lazily it
+    # re-ran the scan + repartition + top-k per reference.
+    base, _ = cell_base(emb)
+    k = seed_k(base)
+    cent = materialize(rank_seed_centroids(base, k))
     # assign feeds five branches (residuals, queries, cellmates, exact,
     # cell sizes): localCheckpoint the small panel so the
     # centroid-argmax chain runs once AND its lineage is truncated —
@@ -1604,20 +1607,8 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     # full argmax subtree into the plan (r11 before-plan:
     # q_ivfpq_ann 558 Exchanges / 175 parquet scans, ~0.5 MB of plan
     # text; after: see plans/r11/q_ivfpq_ann_after.txt).
-    assign = materialize(_cell_assign(emb, extra=()))
+    assign = materialize(with_hot_cell_split(assign_cells(base, cent), k))
     v = assign.select("vid", "vv")
-    # Residual encoding (Jegou et al. 2011 sec. V): PQ quantizes
-    # v - centroid(cell(v)). The centroid panel is the rank-seed
-    # vectors — ~sqrt(n) rows, broadcast; deterministic (no mean).
-    # Checkpointed: it is re-read by the residual join, every probe's
-    # query-residual join, and the ADC LUTs — lazily it re-ran the
-    # scan + repartition + top-k per reference.
-    base, _ = cell_base(emb)
-    k = seed_k(base)
-    cent = materialize(
-        rank_seed_centroids(base, k)
-        .select("cid", "cv", "cnrm")
-    )
     rv = assign.join(F.broadcast(cent.select("cid", "cv")), "cid").select(
         "vid", F.zip_with("vv", "cv", lambda x, y: x - y).alias("rv")
     )
@@ -1636,11 +1627,12 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     # (rn in (k, k+KS]) for ANY corpus size; the previous chained
     # asc-limit/desc-limit trick diverged when n < k + _IVFPQ_KS,
     # admitting zero-residual seeds into the codebook (ADVICE r10).
-    # Both top-k's are TakeOrderedAndProject; the seed panel is a
-    # broadcast anti-join, no global window.
+    # The seed vids are the checkpointed centroid panel's ids; the
+    # top-k is TakeOrderedAndProject behind a broadcast anti-join, no
+    # global window.
     pq_seed_ids = (
         v.join(
-            F.broadcast(v.orderBy("vid").limit(k).select("vid")),
+            F.broadcast(cent.select(F.col("cid").alias("vid"))),
             "vid",
             "left_anti",
         )
@@ -1654,57 +1646,41 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     # 2048-row seed codebook, read once: by the Lloyd pass below, whose
     # refit codebook cb1 is the materialized one.
     cb = sub.join(F.broadcast(pq_seed_ids), "vid").select(
-        F.col("vid").alias("pcid"),
+        F.col("vid").alias("cid"),
         "m",
         F.col("sv").alias("cv"),
         F.col("sn").alias("cn"),
     )
-
-    # Nearest codeword per (vid, m): a map-side-combinable min_by
-    # aggregate over the broadcast codebook join, NOT a window — the
-    # n x M x 256 candidate relation never crosses an exchange at full
-    # width (the _argmax_assign discipline).
-    def _nearest(rel, book):
-        return (
-            rel.join(F.broadcast(book), "m")
-            .withColumn("d2", _pq_d2e4("sn", "cn", "sv", "cv"))
-            .groupBy("vid", "m")
-            .agg(F.expr("min_by(pcid, struct(d2, pcid))").alias("pcid"))
-        )
-
+    # Nearest codeword per (vid, m): similarity.nearest keyed by the
+    # subspace, scored by the negated e4 squared L2 (exact for longs).
+    # Its map-side max_by keeps the n x M x 256 candidate relation from
+    # crossing an exchange at full width.
+    neg_d2 = -_pq_d2e4("sn", "cn", "sv", "cv")
     # One Lloyd pass on the codebook (the standard PQ training step):
     # assign a ~25% hash-sampled TRAINING SET of residual subvectors
     # to the nearest sampled codeword (codebooks train on a sample,
     # never the corpus — the FAISS practice and the 100 TB posture:
     # training cost is |sample| x M x 256, independent of corpus
-    # growth), re-fit each codeword as the per-dimension member mean
-    # (6-decimal rounds — the _lloyd_centroids determinism
-    # discipline), drop empty codewords. Sampled codewords alone
-    # leave the tight-cluster residual distribution under-covered
-    # (BENCH_AB ann_clustered_recall tracks the trained delta).
-    from .sampling import hash_bucket
-
+    # growth), re-fit each codeword as the 6-decimal per-dimension
+    # member mean (similarity.lloyd_step), drop empty codewords.
+    # Sampled codewords alone leave the tight-cluster residual
+    # distribution under-covered (BENCH_AB ann_clustered_recall tracks
+    # the trained delta).
     tsub = sub.filter(hash_bucket("pqtrain", F.col("vid")) < 250)
-    enc0 = _nearest(tsub, cb)
-    dm = (
-        enc0.join(sub, ["vid", "m"])
-        .select("m", "pcid", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("m", "pcid", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("mu"))
-    )
+    enc0 = nearest(tsub, cb, neg_d2, key=("m",), carry=("sv",))
     cb1 = materialize(
-        dm.groupBy("m", "pcid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "mu"))).alias("pm"))
-        .select(
-            "m", "pcid", F.transform(F.col("pm"), lambda s: s["mu"]).alias("cv")
-        )
-        .withColumn("cn", _pq_udot("cv", "cv"))
+        lloyd_step(enc0, "sv", key=("m",)).withColumn("cn", _pq_udot("cv", "cv"))
     )
     # Corpus codes: n x M rows (tiny relative to the n x M x 256
     # candidate relation that produced them). Checkpointed — the ADC
     # consumers (one per probe in the nprobe curve) otherwise each
     # re-inline the whole encode subtree.
-    enc = materialize(_nearest(sub, cb1))
+    enc = materialize(
+        nearest(sub, cb1, neg_d2, key=("m",)).select(
+            "vid", "m", F.col("cid").alias("pcid")
+        )
+    )
+    cb1 = cb1.withColumnRenamed("cid", "pcid")
     q = assign.filter(
         (F.col("vid") % 97 == 3) & (F.col("vid") < 1000)
     ).select(
@@ -1945,8 +1921,9 @@ def q_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: cell assignment is the shared 4-decimal text; all
     distances e4 integers; ranks tie-break on vid (codeword argmin is
-    a map-side min_by, not a window); Lloyd re-fit means are 6-decimal
-    rounds (the _lloyd_centroids determinism discipline).
+    similarity.nearest's map-side max_by over the negated distance,
+    not a window); Lloyd re-fit means are similarity.lloyd_step's
+    6-decimal rounds.
 
     Scale: candidate generation is the bounded query panel's cell
     probe — at most |panel| x max_cell pairs, i.e. <= 11n even when a
@@ -2572,7 +2549,7 @@ def q_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth never divides by zero.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = _cell_assign(
+    assign = cell_assign(
         emb,
         extra=(
             ("is_old", hash_bucket("ivfinc", F.col("vec_id"), 10) < 9),
@@ -2877,7 +2854,7 @@ def q_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt(n)-row panels reduced to one row.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = _cell_assign(emb, extra=(), cap_mult=float(_HCS_CAP_MULT)).select(
+    assign = cell_assign(emb, extra=(), cap_mult=float(_HCS_CAP_MULT)).select(
         "vid", "cid", "sub"
     )
     cells = assign.groupBy("cid").agg(F.count("*").cast("long").alias("cnt"))
@@ -2985,8 +2962,6 @@ def q_cell_quantizer_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     panels and the move count is a vid-keyed self-join of two
     assignment relations (key-partitioned, linear).
     """
-    from .cell_common import cell_assign_stages, cell_base, rank_seed_centroids, seed_k
-
     emb = load_table(spark, sf_dir, "embeddings")
     base, _ = cell_base(emb, ())
     k = seed_k(base)
@@ -3343,21 +3318,18 @@ def q_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixes nprobe=1; this measures what raising it buys).
 
     Plan: one sqrt(n)-cell assignment pass (the shared cell_common
-    machinery — rank seeds, max_by argmax), a bounded query x centroid
+    machinery — rank seeds, similarity.nearest), a bounded query x centroid
     probe ranking (<= |panel| * sqrt(n) rows), then ONE candidate join
     on cid evaluated once and reused for all probe levels via a 3-row
     broadcast level frame (prank <= nprobe) — the index property under
     test IS that candidates are ~nprobe/sqrt(n) of the corpus, so the
     exact-cosine evaluation touches that fraction, never all of it.
     """
-    from ..functions.similarity import _dot as _sdot
-    from .cell_common import _argmax_assign, cell_base, rank_seed_centroids, seed_k
-
     emb = load_table(spark, sf_dir, "embeddings")
     base, _ = cell_base(emb)
     k = seed_k(base)
     cent = rank_seed_centroids(base, k)
-    assign = _argmax_assign(base, cent, ())
+    assign = assign_cells(base, cent)
     tot = base.agg(F.count("*").cast("long").alias("nn"))
 
     q = base.filter(F.col("vid") <= 5).select(
@@ -3366,7 +3338,7 @@ def q_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     qc = q.crossJoin(F.broadcast(cent)).select(
         "qid",
         "cid",
-        F.round(_sdot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm")), 4)
+        F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm")), 4)
         .alias("qcos"),
     )
     w_p = Window.partitionBy("qid").orderBy(F.col("qcos").desc(), F.col("cid"))
@@ -3384,7 +3356,7 @@ def q_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vid",
             "prank",
             F.round(
-                _sdot(F.col("vv"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 4
+                _dot(F.col("vv"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 4
             ).alias("cos"),
         )
     )

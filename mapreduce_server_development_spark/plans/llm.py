@@ -41,11 +41,15 @@ from ..functions.dedup import (  # noqa: F401 — re-exported query deps
 )
 from .sampling import _bucket_sql as _sampling_bucket_sql
 from ..functions.similarity import (
+    _as_double,
+    _dot,
+    _norm,
     cosine_topk,
     embedding_near_dup_pairs,
     ivf_topk,
     lsh_bucket_topk,
     lsh_plane_weights,
+    nearest,
     semantic_dedup_flags,
 )
 from ..functions.text import STOPWORDS, tokens_col, word_shingles
@@ -2189,35 +2193,15 @@ def q_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; vectors whose cell has no other member drop out (no
     neighbor), matched by the oracle's inner join.
     """
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
-        F.col("vec_id").alias("vid"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-        "label",
-    ).withColumn(
-        "nrm",
-        F.sqrt(F.aggregate(F.transform(F.col("v"), lambda x: x * x), F.lit(0.0), lambda a, x: a + x)),
-    )
+        F.col("vec_id").alias("vid"), _as_double("embedding").alias("v"), "label"
+    ).withColumn("nrm", _norm("v"))
     cent = base.filter(F.col("vid") <= 16).select(
         F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    assign = (
-        base.crossJoin(F.broadcast(cent))
-        .withColumn("ccos", F.round(dot / (F.col("nrm") * F.col("cnrm")), 4))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vid").orderBy(F.col("ccos").desc(), F.col("cid"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vid", "cid", "v", "nrm", "label")
-    )
+    ccos = F.round(_dot("v", "cv") / (F.col("nrm") * F.col("cnrm")), 4)
+    assign = nearest(base, cent, ccos, carry=("v", "nrm", "label"))
     a = assign.select(
         "cid", F.col("vid").alias("vid"), F.col("v").alias("va"),
         F.col("nrm").alias("na"), F.col("label").alias("la"),
@@ -2226,15 +2210,7 @@ def q_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid", F.col("vid").alias("bvid"), F.col("v").alias("vb"),
         F.col("nrm").alias("nb"), F.col("label").alias("lb"),
     )
-    pcos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("na") * F.col("nb")),
-        4,
-    )
+    pcos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
     nn = (
         a.join(b, "cid")
         .filter(F.col("vid") != F.col("bvid"))

@@ -3150,13 +3150,14 @@ def q_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB posture: the centroid panel is the ONLY shared state and
     is broadcast-sized by construction (sqrt(n)); per-batch work is
-    one broadcast crossJoin + map-side max_by argmax (the
-    _argmax_assign discipline — no window, no shuffle of raw
-    vectors); arrival rows append to the sink partitioned by nothing
+    the family's one assignment kernel, ``similarity.nearest`` (one
+    broadcast crossJoin + map-side max_by — no window, no shuffle of
+    raw vectors); arrival rows append to the sink partitioned by nothing
     the driver touches. Batch-boundary invariant by construction
     (per-row stateless screen), pinned by the multi-batch replay
     test.
     """
+    from ..functions.similarity import _dot, nearest
     from .cell_common import cell_base, rank_seed_centroids, seed_k
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3170,38 +3171,14 @@ def q_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = f"{root}/out"
 
     def route(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.repartition(
-            batch_df.sparkSession.sparkContext.defaultParallelism
-        )
-        vv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        nrm = F.sqrt(
-            F.aggregate(
-                F.transform(F.col("vv"), lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-        rows = b.select(
-            F.col("vec_id").alias("vid"), vv.alias("vv")
-        ).withColumn("nrm", nrm)
-        dot = F.aggregate(
-            F.zip_with(F.col("vv"), F.col("cv"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        ccos = F.round(dot / (F.col("nrm") * F.col("cnrm")), 4)
+        rows, _ = cell_base(batch_df)
+        ccos = F.round(_dot("vv", "cv") / (F.col("nrm") * F.col("cnrm")), 4)
         (
-            rows.crossJoin(F.broadcast(cent))
-            .withColumn("ccos", ccos)
-            .groupBy("vid")
-            .agg(
-                F.expr("max_by(cid, struct(ccos, -cid))").alias("cid"),
-                F.max("ccos").alias("ccos"),
-            )
+            nearest(rows, cent, ccos)
             .select(
                 "vid",
                 "cid",
-                F.round(F.col("ccos") * 10000).cast("long").alias("ccos_e4"),
+                F.round(F.col("score") * 10000).cast("long").alias("ccos_e4"),
             )
             .write.mode("append")
             .parquet(out_dir)

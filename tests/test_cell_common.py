@@ -6,13 +6,17 @@ The skewed fixture jitters half the corpus around one direction so a
 single cell goes hot; the tests then pin (a) the shard-size bound the
 split guarantees, (b) that balanced cells stay un-split, and (c) that
 a full registered query (q_knn_graph) stays ENGINE-EXACT against its
-own DuckDB oracle while the split is live.
+own DuckDB oracle while the split is live. A source scan pins that the
+ANN family has one nearest-centroid assignment and one Lloyd step.
 """
 
 from __future__ import annotations
 
+import ast
 import math
 import random
+import re
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -124,3 +128,67 @@ def test_skewed_hard_negatives_engine_exact(spark, skew_dir):
     ]
     con.close()
     assert got == exp
+
+
+PKG = Path(__file__).resolve().parent.parent / "mapreduce_server_development_spark"
+
+
+def _call_name(call: ast.Call) -> str | None:
+    return getattr(call.func, "attr", None) or getattr(call.func, "id", None)
+
+
+def _constants(node: ast.AST) -> list:
+    return [n.value for n in ast.walk(node) if isinstance(n, ast.Constant)]
+
+
+def test_vector_quantization_has_one_kernel():
+    """Every nearest-centroid assignment and every Lloyd step in the
+    package goes through functions/similarity's ``nearest`` and
+    ``lloyd_step``. A Lloyd step is a top-level function that
+    posexplodes vectors, takes ``round(avg(...), 6)`` means and
+    rebuilds them with ``collect_list``. A nearest assignment is a
+    top-level function holding a ``max_by``/``min_by`` over a struct,
+    or a rank-1 ``row_number`` window with a centroid-id
+    (``cid``/``pcid``) tie-break."""
+    lloyd, assign = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = f"{path.stem}.{fn.name}"
+            nodes = list(ast.walk(fn))
+            calls = [n for n in nodes if isinstance(n, ast.Call)]
+            names = {_call_name(c) for c in calls}
+            mean6 = any(
+                _call_name(c) == "round"
+                and c.args
+                and isinstance(c.args[0], ast.Call)
+                and _call_name(c.args[0]) == "avg"
+                and 6 in _constants(c)
+                for c in calls
+            )
+            if mean6 and {"posexplode", "collect_list"} <= names:
+                lloyd.append(where)
+            by_struct = any(
+                isinstance(v, str) and re.search(r"\b(max|min)_by\(\w+, struct\(", v)
+                for v in _constants(fn)
+            )
+            cid_rank = any(
+                _call_name(c) == "orderBy"
+                and any(v in ("cid", "pcid") for a in c.args for v in _constants(a))
+                for c in calls
+            )
+            rank1 = any(
+                isinstance(v, str) and re.search(r"\brn\s*=\s*1\b", v)
+                for v in _constants(fn)
+            ) or any(
+                isinstance(n, ast.Compare)
+                and isinstance(n.ops[0], ast.Eq)
+                and 1 in _constants(n.comparators[0])
+                for n in nodes
+            )
+            if by_struct or ("row_number" in names and cid_rank and rank1):
+                assign.append(where)
+    assert lloyd == ["similarity.lloyd_step"]
+    assert assign == ["similarity.nearest"]

@@ -370,8 +370,8 @@ def test_tokens_col_delimiter_is_literal(spark):
 
 
 def test_semantic_dedup_hot_cell_cap(spark):
-    """Cells above max_cell_size skip the pairwise stage — their
-    members are never flagged (the documented prune tradeoff)."""
+    """A hot cell is not capped: every member of a single 8-vector
+    cell is compared, and all but the min id are flagged."""
     from mapreduce_server_development_spark.functions.similarity import (
         semantic_dedup_flags,
     )
@@ -380,5 +380,3 @@ def test_semantic_dedup_hot_cell_cap(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     flagged = semantic_dedup_flags(emb, nlist=1, threshold=0.9)
     assert sum(r.is_dup for r in flagged.collect()) == 7  # all but min id
-    capped = semantic_dedup_flags(emb, nlist=1, threshold=0.9, max_cell_size=3)
-    assert sum(r.is_dup for r in capped.collect()) == 0

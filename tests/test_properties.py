@@ -237,6 +237,85 @@ def test_global_running_sum_matches_cumsum(spark, vals, nparts):
         assert got[k] == acc
 
 
+_VEC = st.lists(st.integers(-3, 3), min_size=2, max_size=2)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    points=st.lists(_VEC, min_size=1, max_size=10),
+    seeds=st.lists(st.integers(0, 9), min_size=1, max_size=3),
+    cids=st.permutations(range(10, 16)),
+    keyed=st.booleans(),
+)
+def test_nearest_and_lloyd_step_match_python_kmeans(spark, points, seeds, cids, keyed):
+    """One k-means step through similarity.nearest + lloyd_step equals a
+    pure-Python step: each point takes the codeword of highest score
+    (negated integer squared L2), a tie goes to the lowest cid, and each
+    codeword becomes the 6-decimal per-dimension mean of its members.
+    The book holds a duplicate of its first codeword (a score tie for
+    every point) and a far codeword that wins nothing (its cell drops).
+    With ``keyed`` every point has two subspaces m, each searched
+    against its own book, as in product quantization."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_server_development_spark.functions.similarity import (
+        lloyd_step,
+        nearest,
+    )
+
+    ms = (0, 1) if keyed else (0,)
+    # subspace m shifts the coordinates so the two books differ
+    pts = {(vid, m): [x + m for x in v] for vid, v in enumerate(points) for m in ms}
+    book_vecs = [points[i % len(points)] for i in seeds]
+    book_vecs += [book_vecs[0], [100, 100]]
+    book = {
+        (m, cid): [x + m for x in v] for m in ms for cid, v in zip(cids, book_vecs)
+    }
+
+    def d2(a, b):
+        return sum((x - y) ** 2 for x, y in zip(a, b))
+
+    want_assign = {}
+    for (vid, m), v in pts.items():
+        score, neg_cid = max(
+            (-d2(v, cv), -cid) for (bm, cid), cv in book.items() if bm == m
+        )
+        want_assign[(vid, m)] = (-neg_cid, score)
+    members = {}
+    for (vid, m), (cid, _) in want_assign.items():
+        members.setdefault((m, cid), []).append(pts[(vid, m)])
+    want_cent = {
+        key: [round(sum(col) / len(col), 6) for col in zip(*vs)]
+        for key, vs in members.items()
+    }
+    assert (0, cids[len(book_vecs) - 1]) not in want_cent  # the far codeword
+
+    pdf = spark.createDataFrame(
+        [(vid, m, [float(x) for x in v]) for (vid, m), v in pts.items()],
+        "vid long, m long, v array<double>",
+    )
+    bdf = spark.createDataFrame(
+        [(m, cid, [float(x) for x in v]) for (m, cid), v in book.items()],
+        "m long, cid long, cv array<double>",
+    )
+    if not keyed:
+        pdf, bdf = pdf.drop("m"), bdf.drop("m")
+    key = ("m",) if keyed else ()
+    score = -F.aggregate(
+        F.zip_with("v", "cv", lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda a, x: a + x
+    ).cast("long")
+    assign = nearest(pdf, bdf, score, key=key, carry=("v",))
+    got_assign = {
+        (r["vid"], r["m"] if keyed else 0): (r["cid"], r["score"]) for r in assign.collect()
+    }
+    assert got_assign == want_assign
+    got_cent = {
+        (r["m"] if keyed else 0, r["cid"]): list(r["cv"])
+        for r in lloyd_step(assign, "v", key=key).collect()
+    }
+    assert got_cent == want_cent
+
+
 @given(
     args=st.lists(
         st.text(st.sampled_from("ab c/.'\"-_$"), min_size=1, max_size=8),
