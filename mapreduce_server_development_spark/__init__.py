@@ -5,9 +5,9 @@ the reference MapReduce framework (ChristineWmy/MapReduce-Server-Development,
 surveyed in SURVEY.md), re-expressed Spark-first:
 
 - the MapReduce dataflow (partition -> map -> sort -> group-by-key ->
-  reduce -> sink) becomes ``operators.mapreduce`` (``rdd.pipe`` for the
-  arbitrary-executable contract, Spark shuffle for the group stage),
-  with a CLI in ``cli``;
+  reduce -> sink) becomes ``operators.mapreduce`` (the JVM ``RDD.pipe``
+  for the arbitrary-executable contract, a Dataset shuffle for the group
+  stage), with a CLI in ``cli``;
 - the reference's query library (word count, grep) lives in
   ``plans.mapreduce_queries``; the additive relational surface in
   ``plans.relational``;

@@ -1,7 +1,7 @@
 """Operators that need imperative/per-partition execution.
 
 ``mapreduce`` — the MapReduce-compat job API (arbitrary executables as
-map/reduce operators via ``rdd.pipe``); everything else in the engine
+map/reduce operators via the JVM ``RDD.pipe``); everything else in the engine
 is DataFrame-first and lives in ``plans/`` / ``functions/``.
 """
 

@@ -18,43 +18,48 @@ a directory of text files" (SURVEY.md §2.1-2.2):
 - sink: output dir overwritten, results named ``outputfile01..NN``
   (reference: mapreduce/manager/__main__.py:738-761).
 
-Spark mapping: ``rdd.pipe`` is the literal subprocess/stdin/stdout
-analog (one pipe invocation per partition); the group stage is Spark's
-shuffle. Everything the reference's Manager/Worker processes do
-operationally — FIFO job queue, dynamic load balancing, heartbeats,
-task re-execution, straggler handling (SURVEY §2.1 F9-F14) — is the
-Spark scheduler and needs no code here.
+Spark mapping — no line leaves the JVM, so no PySpark Python worker
+runs during a job. Map: per file, the JVM ``textFile(f, 1).coalesce(1)
+.pipe(argv)`` (``PipedRDD``: one subprocess per partition, elements on
+stdin, one element per stdout line), the files' RDDs unioned. Group:
+that ``JavaRDD[String]`` as a ``Dataset[String]``, ``repartition(n,
+route)``, ``sortWithinPartitions(value || '\\n')``. Reduce: back to a
+``JavaRDD[String]`` piped through the reducer; partition i becomes
+``outputfile(i+1)``. A nonzero exit fails the task, so Spark's task
+re-execution (F13) applies; the rest of the reference's operational
+plane (FIFO job queue, load balancing, heartbeats — SURVEY §2.1
+F9-F14) is the Spark scheduler and needs no code here.
 
-Two grouping modes:
+Two grouping modes (the route column):
 
-- ``compat=True`` (default): byte-exact reference semantics — global
-  lexicographic sort + distinct-line round-robin routing. Costs a
-  count + sort of the distinct map-output lines; use for golden parity.
-- ``compat=False``: the 100 TB path — hash-partition on the tab-key
-  with ONE shuffle (``repartitionAndSortWithinPartitions``); identical
-  reduce results for key-based reducers (all shipped reference
-  workloads), but line→file assignment differs from the golden splits.
+- ``compat=True`` (default): byte-exact reference semantics.
+  ``dense_rank() over (order by value || '\\n')`` numbers the distinct
+  lines; rank k's route is the BIGINT key that Spark's hash partitioner
+  sends to partition ``(k-1) % n`` (``_route_keys``).
+- ``compat=False``: route on the tab-key
+  ``substring_index(value, '\\t', 1)``. Identical reduce results for
+  key-based reducers (all shipped reference workloads), but line→file
+  assignment differs from the golden splits.
 
-Scale posture: no ``collect`` anywhere; the sort is Spark's
-range-partitioned external sort (spill-backed — the analog of the
-reference's heapq k-way merge under its tested 1 MB bound); the
-per-file subprocess framing in the map stage matches the reference
-exactly and parallelizes per file.
+Scale posture: no ``collect``. The compat rank is one window with no
+PARTITION BY: every line funnels through a single sorted, spill-backed
+window task — the same single-process merge the reference Manager does
+(heapq k-way merge). A range-partitioned rank (``functions/prefix.py``)
+measured slower on a fresh process's first job and no faster warm.
+``compat=False`` keeps every stage parallel (SCALE.md).
 """
 
 from __future__ import annotations
 
-import itertools
-import operator
 import os
 import shlex
 import shutil
 from dataclasses import asdict, dataclass
 from pathlib import Path
 
-from pyspark import RDD, SparkContext
-from pyspark.rdd import portable_hash
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -76,19 +81,23 @@ class JobSpec:
     num_reducers: int = 1
 
 
-def _cmd(executable: str | list[str] | tuple[str, ...]) -> str:
-    """Build the shell command for an executable spec.
+def _argv(executable: str | list[str] | tuple[str, ...]) -> list[str]:
+    """The argv for an executable spec.
 
-    A list/tuple is treated as argv tokens (each quoted); a string is
-    shlex-split first, so ``"grep_map.py apple pie"`` runs the mapper
-    with two arguments. Paths containing spaces must use the list form.
+    A list/tuple is taken token by token; a string is shlex-split, so
+    ``"grep_map.py apple pie"`` runs the mapper with two arguments. No
+    shell runs the command, so every token reaches the process verbatim.
     """
-    parts = (
-        list(executable)
-        if isinstance(executable, (list, tuple))
-        else shlex.split(str(executable))
-    )
-    return " ".join(shlex.quote(p) for p in parts)
+    if isinstance(executable, (list, tuple)):
+        return [str(p) for p in executable]
+    return shlex.split(str(executable))
+
+
+def _pipe(jrdd, executable: str | list[str]):
+    """Pipe each partition of a JVM ``JavaRDD[String]`` through one
+    subprocess (``PipedRDD``, UTF-8 both ways). A nonzero exit FAILS
+    the task instead of silently truncating its output."""
+    return jrdd.pipe(_argv(executable), {}, False, 8192, "UTF-8")
 
 
 def round_robin_partition(files: list[str], num_tasks: int) -> list[list[str]]:
@@ -104,36 +113,19 @@ def round_robin_partition(files: list[str], num_tasks: int) -> list[list[str]]:
     return tasks
 
 
-def _make_sort_key():
-    # The reference sorts newline-TERMINATED strings (readlines() then
-    # sort(); heapq.merge of those runs). "a" vs "a\tb" order flips if
-    # compared bare, so the trailing newline is part of the sort key.
-    # Returned as a locally-defined closure so cloudpickle ships it BY
-    # VALUE: a module-level function would be pickled by reference and
-    # executors would need this package importable (it is not, when the
-    # driver runs from outside the repo).
-    def _sort_key(line: str) -> str:
-        return line + "\n"
-
-    return _sort_key
-
-
-def _pipe_per_file(sc: SparkContext, files: list[str], executable: str | list[str]) -> RDD:
+def _pipe_per_file(sc: SparkContext, files: list[str], executable: str | list[str]):
     """Map stage: one subprocess per input file (per-file framing).
 
-    ``sc.textFile(f).coalesce(1).pipe(cmd)`` = read the file, feed its
-    lines to the executable's stdin, one element per stdout line —
-    exactly the reference worker's per-file Popen/communicate loop.
-
-    ``checkCode=True`` so a nonzero exit FAILS the task (instead of
-    silently truncating its output) and Spark's task re-execution —
-    F13, the reference manager's dead-worker reassignment — kicks in.
+    ``textFile(f, 1).coalesce(1)`` keeps each file one partition, so
+    each pipe invocation reads exactly one file on stdin — the
+    reference worker's per-file Popen/communicate loop.
     """
-    cmd = _cmd(executable)
-    rdds = [sc.textFile(f, 1).coalesce(1).pipe(cmd, checkCode=True) for f in files]
-    if not rdds:
-        return sc.emptyRDD()
-    return sc.union(rdds)
+    if not files:
+        return sc._jsc.emptyRDD()
+    rdds = sc._gateway.new_array(sc._jvm.org.apache.spark.api.java.JavaRDD, len(files))
+    for i, f in enumerate(files):
+        rdds[i] = _pipe(sc._jsc.textFile(f, 1).coalesce(1), executable)
+    return sc._jsc.union(rdds)
 
 
 #: Characters Hadoop's path resolution treats specially: textFile's
@@ -183,7 +175,6 @@ def run_job(
     Synchronous (the Spark action IS the job); multi-job queueing,
     load balancing and fault recovery are the Spark scheduler's.
     """
-    sc = spark.sparkContext
     # Skip Hadoop marker/hidden files ('_SUCCESS', '.*.crc') — Hadoop
     # input formats ignore them, and piping them would corrupt results.
     files = sorted(
@@ -192,16 +183,21 @@ def run_job(
         if p.is_file() and not p.name.startswith((".", "_"))
     )
     files, tmpdir = _safe_input_paths(files)
+    sc = spark.sparkContext
+    n = max(1, num_reducers)
+    strings = sc._jvm.org.apache.spark.sql.Encoders.STRING()
     try:
-        return _run_job_stages(
-            sc,
-            files,
-            output_directory,
-            mapper_executable,
-            reducer_executable,
-            num_reducers,
-            compat,
-        )
+        mapped = _pipe_per_file(sc, files, mapper_executable)
+        lines = spark._jsparkSession.createDataset(mapped.rdd(), strings).toDF()
+        grouped = group_stage(DataFrame(lines, spark), n, compat)
+        sorted_lines = getattr(grouped._jdf, "as")(strings).javaRDD()
+        if sorted_lines.getNumPartitions() < n:
+            # AQE plans an empty group stage as a 0-partition scan, but
+            # the reference runs every reducer, on empty stdin if need be.
+            sorted_lines = sc._jsc.parallelize([], n)
+        # F7: one reducer subprocess per reduce partition, sorted lines
+        # on stdin — partition i becomes outputfile(i+1).
+        return _sink_numbered(_pipe(sorted_lines, reducer_executable), output_directory)
     finally:
         # The symlink detour (Hadoop-metachar file names) lives until
         # the sink's action has consumed every input.
@@ -209,72 +205,75 @@ def run_job(
             shutil.rmtree(tmpdir, ignore_errors=True)
 
 
-def _run_job_stages(
-    sc: SparkContext,
-    files: list[str],
-    output_directory: str,
-    mapper_executable: str | list[str],
-    reducer_executable: str | list[str],
-    num_reducers: int,
-    compat: bool,
-) -> list[str]:
-    mapped = _pipe_per_file(sc, files, mapper_executable)
-    sorted_lines = group_stage(mapped, num_reducers, compat)
-
-    # F7: one reducer subprocess per reduce partition, sorted lines on
-    # stdin — partition i becomes outputfile(i+1).
-    reduced = sorted_lines.pipe(_cmd(reducer_executable), checkCode=True)
-
-    return _sink_numbered(reduced, output_directory)
+_M32 = 0xFFFFFFFF
 
 
-def group_stage(mapped: RDD, num_reducers: int, compat: bool = True) -> RDD:
-    """Group stage: map-output lines -> ``num_reducers`` partitions,
-    each sorted by ``line + "\\n"``; partition i feeds reducer i."""
+def _murmur3_long(x: int, seed: int = 42) -> int:
+    """Spark SQL's ``hash(CAST(x AS BIGINT))``: Murmur3_x86_32
+    ``hashLong`` with the SQL seed 42, as a signed 32-bit int."""
+
+    def rotl(v: int, r: int) -> int:
+        return ((v << r) | (v >> (32 - r))) & _M32
+
+    def mix(h: int, k: int) -> int:
+        k = rotl((k * 0xCC9E2D51) & _M32, 15) * 0x1B873593 & _M32
+        return (rotl(h ^ k, 13) * 5 + 0xE6546B64) & _M32
+
+    x &= 0xFFFFFFFFFFFFFFFF
+    h = mix(mix(seed, x & _M32), x >> 32) ^ 8
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & _M32
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def _route_keys(n: int) -> list[int]:
+    """Key i is the smallest long that ``repartition(n, key)`` sends to
+    partition i: Spark's hash partitioner is ``pmod(hash(key), n)``."""
+    keys: dict[int, int] = {}
+    x = 0
+    while len(keys) < n:
+        keys.setdefault(_murmur3_long(x) % n, x)
+        x += 1
+    return [keys[i] for i in range(n)]
+
+
+def group_stage(lines: DataFrame, num_reducers: int, compat: bool = True) -> DataFrame:
+    """Group stage: a ``value`` column of map-output lines ->
+    ``num_reducers`` partitions, each sorted by ``value || '\\n'``;
+    partition i feeds reducer i."""
     n = max(1, num_reducers)
-    sort_key = _make_sort_key()
+    # The reference sorts newline-TERMINATED strings (readlines() then
+    # sort(); heapq.merge of those runs): "a" vs "a\tb" order flips if
+    # compared bare. Spark compares strings as UTF-8 bytes, which is
+    # code point order, like Python's str.
+    sort_key = F.concat("value", F.lit("\n"))
     if compat:
-        # Global dense rank over distinct lines (sorted), then route
-        # line -> rank % n. Each distinct line is counted once and
-        # re-emitted count times, so the mapper output is evaluated
-        # ONCE: a second evaluation (a join back against the ranks)
-        # would re-run every mapper, and a non-deterministic mapper's
-        # lines would then match no rank and vanish silently.
-        routed = (
-            mapped.map(lambda line: (line, 1))
-            .reduceByKey(operator.add)
-            .sortBy(lambda kv: sort_key(kv[0]))
-            .zipWithIndex()
-            .flatMap(
-                lambda kvr: itertools.repeat(
-                    ((kvr[1] % n, sort_key(kvr[0][0])), kvr[0][0]), kvr[0][1]
-                )
-            )
-        )
+        # Rank and route come from the same row, so the mapper runs
+        # once: joining lines back to their ranks would re-run it, and
+        # a nondeterministic mapper's lines would match no rank.
+        # The route keys must be BIGINT: an INT literal hashes
+        # differently, and output files would silently swap contents.
+        # A window cannot sit inside repartition(), hence withColumn.
+        keys = F.array(*(F.lit(k).cast("long") for k in _route_keys(n)))
+        rank = F.dense_rank().over(Window.orderBy(sort_key))
+        route = F.element_at(keys, ((rank - 1) % n + 1).cast("int"))
     else:
-        # One-shuffle path: hash the tab-separated key. Sorting by the
-        # full line keeps identical keys adjacent (keys contain no tab),
-        # which is all a sort-contract reducer (`uniq -c`) needs.
-        routed = mapped.map(
-            lambda line: (
-                (portable_hash(line.split("\t", 1)[0]) % n, sort_key(line)),
-                line,
-            )
-        )
-    grouped = routed.repartitionAndSortWithinPartitions(
-        numPartitions=n, partitionFunc=lambda k: k[0]
-    )
-    return grouped.map(lambda kv: kv[1], preservesPartitioning=True)
+        # Sorting by the full line keeps identical keys adjacent (keys
+        # hold no tab), which is all a sort-contract reducer needs.
+        route = F.substring_index("value", "\t", 1)
+    routed = lines.withColumn("route", route).repartition(n, "route")
+    return routed.sortWithinPartitions(sort_key).select("value")
 
 
-def _sink_numbered(rdd: RDD, output_directory: str) -> list[str]:
+def _sink_numbered(jrdd, output_directory: str) -> list[str]:
     """F8 sink: overwrite the output dir; part-i → outputfile(i+1).
     Shares the prepare/rename sequence with the DataFrame sink
     (sources/text.py) so the naming semantics can't drift."""
     from ..sources.text import collect_numbered_outputs, prepare_numbered_sink
 
     out, staging = prepare_numbered_sink(output_directory)
-    rdd.saveAsTextFile(str(staging))
+    jrdd.saveAsTextFile(str(staging))
     return collect_numbered_outputs(out, staging)
 
 

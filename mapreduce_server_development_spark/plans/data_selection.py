@@ -42,7 +42,6 @@ from .cell_common import (
     cell_ctes,
     rank_seed_centroids,
     seed_k,
-    with_hot_cell_split,
 )
 from .registry import query
 from .sampling import _bucket_sql, hash_bucket
@@ -1600,14 +1599,14 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     base, _ = cell_base(emb)
     k = seed_k(base)
     cent = materialize(rank_seed_centroids(base, k))
-    # assign feeds five branches (residuals, queries, cellmates, exact,
-    # cell sizes): localCheckpoint the small panel so the
+    # assign feeds four branches (residuals, queries, cellmates,
+    # exact): localCheckpoint the small panel so the
     # centroid-argmax chain runs once AND its lineage is truncated —
     # with a lazy persist every downstream reference re-inlined the
     # full argmax subtree into the plan (r11 before-plan:
     # q_ivfpq_ann 558 Exchanges / 175 parquet scans, ~0.5 MB of plan
     # text; after: see plans/r11/q_ivfpq_ann_after.txt).
-    assign = materialize(with_hot_cell_split(assign_cells(base, cent), k))
+    assign = materialize(assign_cells(base, cent))
     v = assign.select("vid", "vv")
     rv = assign.join(F.broadcast(cent.select("cid", "cv")), "cid").select(
         "vid", F.zip_with("vv", "cv", lambda x, y: x - y).alias("rv")

@@ -111,8 +111,8 @@ def q_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL executable plane under driver check: documents.text is
     dumped to a text directory, run through ``run_job`` with the
-    engine's own mapper/reducer executables (``rdd.pipe`` subprocesses,
-    F3+F6+F7), and the ``outputfileNN`` results are read back.
+    engine's own mapper/reducer executables (JVM ``RDD.pipe``
+    subprocesses, F3+F6+F7), and the ``outputfileNN`` results are read back.
 
     Uses the one-shuffle hash-grouping path (``compat=False``) — the
     100 TB posture; the byte-exact compat path is golden-tested in

@@ -24,6 +24,22 @@ needs_reference = pytest.mark.skipif(
 )
 
 
+def group_contract_model(lines: list[str], n: int) -> list[str]:
+    """The reference group stage in plain Python, as the texts of the
+    ``n`` reduce inputs: distinct lines sorted by ``line + "\\n"`` (so
+    ``"a\\tb"`` sorts before ``"a"``), the line ranked k routed to
+    file ``k % n``, every copy of a line kept, each file sorted."""
+
+    def key(line: str) -> str:
+        return line + "\n"
+
+    rank = {line: k for k, line in enumerate(sorted(set(lines), key=key))}
+    return [
+        "".join(key(line) for line in sorted(lines, key=key) if rank[line] % n == i)
+        for i in range(n)
+    ]
+
+
 @pytest.fixture(scope="session")
 def spark():
     if not Path(SF_SMOKE).exists():

@@ -8,11 +8,12 @@ Byte-exact comparison against the reference's own correct/*.txt files
 from __future__ import annotations
 
 import filecmp
+import os
 from pathlib import Path
 
 import pytest
 
-from .conftest import REF_TESTDATA, needs_reference
+from .conftest import REPO, REF_TESTDATA, group_contract_model, needs_reference
 
 INPUT = REF_TESTDATA / "input"
 EXEC = REF_TESTDATA / "exec"
@@ -160,10 +161,9 @@ def test_group_stage_round_robin_splits(spark):
 
     from mapreduce_server_development_spark.operators.mapreduce import group_stage
 
-    sc = spark.sparkContext
     files = sorted(str(p) for p in src.glob("file*"))
-    mapped = sc.union([sc.textFile(f, 1).coalesce(1) for f in files])
-    parts = group_stage(mapped, 2).glom().collect()
+    grouped = group_stage(spark.read.text(files), 2)
+    parts = grouped.rdd.map(lambda row: row.value).glom().collect()
     for i, name in enumerate(["reduce01", "reduce02"]):
         with open(golden_dir / name, encoding="utf-8") as f:
             golden = f.read()
@@ -219,16 +219,10 @@ def test_group_contract_round_robin_model(spark, tmp_path):
     n = 3
     outs = run_job(spark, str(indir), str(tmp_path / "out"), "cat", "cat", 2, n)
 
-    def key(line):
-        return line + "\n"
-
     lines = [line for ls in files.values() for line in ls]
-    rank = {line: k for k, line in enumerate(sorted(set(lines), key=key))}
-    assert rank["a\tb"] < rank["a"]
-    expected = [
-        "".join(key(line) for line in sorted(lines, key=key) if rank[line] % n == i)
-        for i in range(n)
-    ]
+    expected = group_contract_model(lines, n)
+    # "a\tb" ranks 1 and "a" ranks 2: the newline-terminated sort.
+    assert expected[1].startswith("a\tb\n") and expected[2].startswith("a\n")
     assert [Path(o).read_text(encoding="utf-8") for o in outs] == expected
 
 
@@ -266,12 +260,12 @@ def test_output_overwrite(spark, tmp_path):
 
 @needs_reference
 def test_run_job_from_external_cwd(tmp_path):
-    """Regression: closures shipped by run_job must serialize by value.
+    """A driver launched outside the repo root runs a job byte-exactly.
 
-    A driver launched outside the repo root (cwd != /root/repo) has no
-    way to import this package on its Python workers; module-level
-    functions pickled by reference then fail with ModuleNotFoundError.
-    Run the wc golden job in a subprocess whose cwd is the temp dir.
+    The package is importable only on the driver there, so the job must
+    need nothing of it on the executors: every stage is a JVM operator
+    or a user executable. Run the wc golden job in a subprocess whose
+    cwd is the temp dir.
     """
     import subprocess
     import sys as _sys
@@ -458,3 +452,115 @@ def test_input_files_with_hadoop_metachars(spark, tmp_path):
     assert counts["hello"] == "2"
     assert counts["world"] == "2"
     assert counts["again"] == "2"
+
+
+_HEADER_REDUCER = ["sh", "-c", "echo header; cat"]
+
+
+def test_empty_input_dir_runs_every_reducer(spark, tmp_path):
+    """An empty input directory still runs each of the n reducers once,
+    on empty stdin: AQE plans the empty group stage with no partitions,
+    and the reduce stage must not inherit that."""
+    from mapreduce_server_development_spark.operators import run_job
+
+    empty_in = tmp_path / "empty"
+    empty_in.mkdir()
+    outs = run_job(spark, str(empty_in), str(tmp_path / "out"), "cat", _HEADER_REDUCER, 2, 3)
+    assert [Path(o).read_text(encoding="utf-8") for o in outs] == ["header\n"] * 3
+
+
+def test_silent_mapper_runs_every_reducer(spark, tmp_path):
+    """A mapper that prints nothing leaves every reducer its own empty
+    input file, as the reference does."""
+    from mapreduce_server_development_spark.operators import run_job
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "f.txt").write_text("a\nb\n")
+    outs = run_job(spark, str(indir), str(tmp_path / "out"), "true", _HEADER_REDUCER, 2, 2)
+    assert [Path(o).read_text(encoding="utf-8") for o in outs] == ["header\n"] * 2
+
+
+def test_murmur3_long_matches_spark_hash_partitioning(spark):
+    """``_murmur3_long(x) % n`` is Spark's hash partition of a BIGINT
+    key, ``pmod(hash(CAST(x AS BIGINT)), n)``, and each route key lands
+    on its own reducer's partition."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_server_development_spark.operators.mapreduce import (
+        _murmur3_long,
+        _route_keys,
+    )
+
+    rows = (
+        spark.range(0, 201)
+        .crossJoin(spark.range(1, 17).withColumnRenamed("id", "n"))
+        .select("id", "n", F.pmod(F.hash(F.col("id").cast("long")), F.col("n")).alias("p"))
+        .collect()
+    )
+    assert len(rows) == 201 * 16
+    assert all(_murmur3_long(r.id) % r.n == r.p for r in rows)
+    for n in range(1, 17):
+        assert [_murmur3_long(k) % n for k in _route_keys(n)] == list(range(n))
+
+
+def test_job_starts_no_python_worker(tmp_path):
+    """Every stage of a job runs in the JVM: after a job in a fresh
+    session, no ``pyspark.daemon`` process hangs under the gateway JVM.
+    A Python ``map`` in the same session then starts one, which shows
+    the check can see it."""
+    import subprocess
+    import sys as _sys
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "f.txt").write_text("b a\na c\n")
+    code = f"""
+import os
+from mapreduce_server_development_spark.operators import run_job
+from mapreduce_server_development_spark.session import get_spark
+
+def python_workers(root):
+    children = {{}}
+    for d in filter(str.isdigit, os.listdir('/proc')):
+        try:
+            with open(f'/proc/{{d}}/stat') as f:
+                ppid = int(f.read().rsplit(')', 1)[1].split()[1])
+        except (OSError, ValueError, IndexError):
+            continue
+        children.setdefault(ppid, []).append(int(d))
+    found, todo = [], [root]
+    while todo:
+        for pid in children.get(todo.pop(), []):
+            todo.append(pid)
+            try:
+                with open(f'/proc/{{pid}}/cmdline', 'rb') as f:
+                    if b'pyspark.daemon' in f.read():
+                        found.append(pid)
+            except OSError:
+                pass
+    return found
+
+spark = get_spark(app_name='no-python-worker', master='local[2]')
+sc = spark.sparkContext
+jvm = sc._gateway.proc.pid
+outs = run_job(spark, {str(indir)!r}, {str(tmp_path / 'out')!r}, 'cat', 'cat', 1, 2)
+print('JOB_OUTPUTS', len(outs))
+print('AFTER_JOB', python_workers(jvm))
+sc.parallelize([1, 2], 2).map(lambda x: x + 1).collect()
+print('AFTER_PYTHON_MAP', python_workers(jvm))
+"""
+    res = subprocess.run(
+        [_sys.executable, "-c", code],
+        cwd=REPO,
+        env={**os.environ, "PYTHONPATH": str(REPO)},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    out = dict(
+        line.split(" ", 1) for line in res.stdout.splitlines() if line.startswith(("JOB_", "AFTER_"))
+    )
+    assert out.get("JOB_OUTPUTS") == "2", res.stderr[-2000:]
+    assert out["AFTER_JOB"] == "[]"
+    assert out["AFTER_PYTHON_MAP"] != "[]"

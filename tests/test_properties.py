@@ -323,12 +323,49 @@ def test_nearest_and_lloyd_step_match_python_kmeans(spark, points, seeds, cids, 
         max_size=4,
     )
 )
-def test_cmd_quotes_argv_lists_safely(args):
-    """_cmd must quote every argv token so shell metacharacters in
-    arguments (quotes, spaces, $) survive the pipe round-trip."""
+def test_argv_passes_tokens_verbatim(args):
+    """No shell runs an executable: an argv list reaches the process
+    token by token, and a shell-style string splits like shlex, so
+    quotes, spaces and $ in arguments survive."""
     import shlex
 
-    from mapreduce_server_development_spark.operators.mapreduce import _cmd
+    from mapreduce_server_development_spark.operators.mapreduce import _argv
 
-    rendered = _cmd(args)
-    assert shlex.split(rendered) == args
+    assert _argv(args) == args
+    assert _argv(tuple(args)) == args
+    assert _argv(shlex.join(args)) == args
+
+
+# The compat group contract: one job per example, so few examples.
+@settings(max_examples=10, deadline=None)
+@given(
+    files=st.lists(
+        st.lists(
+            st.text(st.sampled_from(["a", "b", "\t", " ", "é", "\uff5e", "\U0001f600"]), max_size=4),
+            max_size=10,
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    n=st.integers(1, 5),
+)
+def test_run_job_matches_group_contract_model(spark, tmp_path_factory, files, n):
+    """``cat`` mapper and reducer: the n output files equal the plain
+    Python group contract (``group_contract_model``) over any multiset
+    of lines, empty lines, BMP-high ``～`` and astral ``😀`` included
+    (UTF-16 order would put ``😀`` first; the contract is code point
+    order)."""
+    from pathlib import Path
+
+    from mapreduce_server_development_spark.operators import run_job
+
+    from .conftest import group_contract_model
+
+    root = tmp_path_factory.mktemp("contract")
+    indir = root / "in"
+    indir.mkdir()
+    for i, lines in enumerate(files):
+        (indir / f"f{i}.txt").write_text("".join(line + "\n" for line in lines), encoding="utf-8")
+    outs = run_job(spark, str(indir), str(root / "out"), "cat", "cat", 2, n)
+    expected = group_contract_model([line for lines in files for line in lines], n)
+    assert [Path(o).read_text(encoding="utf-8") for o in outs] == expected
