@@ -23,12 +23,14 @@ scan — same results, Catalyst-owned physical plan.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.tables import load_table
 from .registry import query
 
@@ -113,6 +115,8 @@ def q_pipe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     dumped to a text directory, run through ``run_job`` with the
     engine's own mapper/reducer executables (JVM ``RDD.pipe``
     subprocesses, F3+F6+F7), and the ``outputfileNN`` results are read back.
+    The read-back counts are checkpointed so the temporary directory
+    (input dump and job output) can be deleted before returning.
 
     Uses the one-shuffle hash-grouping path (``compat=False``) — the
     100 TB posture; the byte-exact compat path is golden-tested in
@@ -125,19 +129,22 @@ def q_pipe_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     root = tempfile.mkdtemp(prefix="pipe_wc_")
     in_dir, out_dir = f"{root}/in", f"{root}/out"
-    docs.select("text").write.mode("overwrite").text(in_dir)
-    run_job(
-        spark,
-        in_dir,
-        out_dir,
-        str(EXEC_DIR / "wc_map.py"),
-        str(EXEC_DIR / "wc_reduce.py"),
-        num_mappers=4,
-        num_reducers=4,
-        compat=False,
-    )
-    out = spark.read.text(out_dir)
-    kv = F.split(F.col("value"), "\t", 2)
-    return out.select(
-        kv.getItem(0).alias("word"), kv.getItem(1).cast("long").alias("cnt")
-    ).orderBy("word")
+    try:
+        docs.select("text").write.mode("overwrite").text(in_dir)
+        run_job(
+            spark,
+            in_dir,
+            out_dir,
+            str(EXEC_DIR / "wc_map.py"),
+            str(EXEC_DIR / "wc_reduce.py"),
+            num_mappers=4,
+            num_reducers=4,
+            compat=False,
+        )
+        kv = F.split(F.col("value"), "\t", 2)
+        counts = materialize(spark.read.text(out_dir).select(
+            kv.getItem(0).alias("word"), kv.getItem(1).cast("long").alias("cnt")
+        ))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return counts.orderBy("word")

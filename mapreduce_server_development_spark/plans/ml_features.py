@@ -750,7 +750,10 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one expression tree (measured: MiB-scale task binaries, ~10 s
         # dominated by analysis/codegen). A 1-row localCheckpoint
         # every 2nd squaring caps the tree depth; the materialization
-        # itself is a single-row no-op.
+        # itself is a single-row no-op. Driver literals
+        # (session.one_row) do not replace it: CollapseProject inlines
+        # them into the unrolled squarings, and at sf0.01 the query had
+        # not returned after 5 minutes (about 26 s cold as written).
         if (i + 1) % 2 == 0 and i + 1 < t:
             cur = materialize(cur)
     cur = cur.selectExpr(*allc, *e["vr"])

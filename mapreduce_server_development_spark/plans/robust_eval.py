@@ -57,11 +57,11 @@ limit-bounded ``TakeOrderedAndProject`` rank filters.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.prefix import global_row_number
-from ..session import materialize
+from ..session import materialize, one_row
 from ..sources.tables import load_table
 from .registry import query
 
@@ -1477,8 +1477,11 @@ def q_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: 5 scans of the relation (min/max, three round fan-outs,
     the final pattern pass), each partial-aggregated to at most
-    54 * 2^t * 2 cells; every joined panel (candidates, stumps,
-    pattern weights) is broadcast-sized by construction.
+    54 * 2^t * 2 cells; the joined panels (candidates, pattern
+    weights) are broadcast-sized by construction. Each round's
+    winning stump lives on the driver (``session.one_row``) and
+    enters the next fan-out, the pattern weights and the readout as
+    typed literals.
     """
     li = load_table(spark, sf_dir, "lineitem")
     feats = li.selectExpr(
@@ -1525,20 +1528,20 @@ def q_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .replace("pol", f"s{u}pol")
         )
 
-    def choose(err: DataFrame) -> DataFrame:
+    def choose(err: DataFrame) -> dict[str, Column]:
         alpha = _AB_ALPHA.replace(
             "ec",
             "LEAST(GREATEST(CAST(err_w AS DOUBLE) / 1000000000, 1),"
             " CAST(w_total AS DOUBLE) / 1000000000 - 1)",
         )
-        return materialize(
+        return one_row(
             err.orderBy("err_w", "fid", "thr", "pol")
             .limit(1)
             .selectExpr("fid", "thr", "pol", "err_w", "w_total", f"{alpha} AS alpha_e9")
         )
 
     ann = rows_b
-    stumps: list[DataFrame] = []
+    stumps: list[dict[str, Column]] = []
     for t in range(1, _AB_ROUNDS + 1):
         bits = [f"bit{u}" for u in range(1, t)]
         grp = (
@@ -1564,12 +1567,12 @@ def q_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stump = choose(err)
         stumps.append(stump)
+        alphas = {f"a{u}": st["alpha_e9"] for u, st in enumerate(stumps, 1)}
         # Annotate rows with this round's correctness bit for the
         # next fan-out (and the final pattern pass).
-        s = stump.selectExpr(
-            f"fid AS s{t}fid", f"thr AS s{t}thr", f"pol AS s{t}pol"
-        )
-        ann = ann.crossJoin(F.broadcast(s)).selectExpr(
+        ann = ann.withColumns(
+            {f"s{t}{c}": stump[c] for c in ("fid", "thr", "pol")}
+        ).selectExpr(
             "b0", "b1", "b2", "y", *bits,
             f"(({stump_pred(t)}) = y) AS bit{t}",
         )
@@ -1581,47 +1584,33 @@ def q_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             grid = spark.createDataFrame(
                 grid_rows, ", ".join(f"bit{u + 1} boolean" for u in range(t))
             )
-            alphas = stumps[0].selectExpr("alpha_e9 AS a1")
-            for u in range(2, t + 1):
-                alphas = alphas.crossJoin(
-                    stumps[u - 1].selectExpr(f"alpha_e9 AS a{u}")
-                )
             signed = " + ".join(
                 f"(CASE WHEN bit{u} THEN -a{u} ELSE a{u} END)"
                 for u in range(1, t + 1)
             )
-            stumps_pw = (
-                grid.crossJoin(F.broadcast(alphas))
-                .selectExpr(
-                    *[f"bit{u + 1}" for u in range(t)],
-                    f"CAST(round(exp(({signed}) / 1000000000.0)"
-                    " * 1000000000) AS DECIMAL(38,0)) AS w",
-                )
+            stumps_pw = grid.withColumns(alphas).selectExpr(
+                *[f"bit{u + 1}" for u in range(t)],
+                f"CAST(round(exp(({signed}) / 1000000000.0)"
+                " * 1000000000) AS DECIMAL(38,0)) AS w",
             )
     bitcols = [f"bit{u}" for u in range(1, _AB_ROUNDS + 1)]
     pats = ann.groupBy(*bitcols).agg(F.count("*").cast("long").alias("cnt"))
-    alphas = stumps[0].selectExpr("alpha_e9 AS a1")
-    for u in range(2, _AB_ROUNDS + 1):
-        alphas = alphas.crossJoin(stumps[u - 1].selectExpr(f"alpha_e9 AS a{u}"))
     margin = " + ".join(
         f"(CASE WHEN bit{u} THEN 1 ELSE -1 END) * a{u}"
         for u in range(1, _AB_ROUNDS + 1)
     )
-    final = (
-        pats.crossJoin(F.broadcast(alphas))
-        .agg(
-            F.sum(F.expr(f"CASE WHEN ({margin}) > 0 THEN cnt ELSE 0 END"))
-            .cast("long")
-            .alias("n_correct"),
-            F.sum("cnt").cast("long").alias("n_rows"),
-        )
+    final = pats.withColumns(alphas).agg(
+        F.sum(F.expr(f"CASE WHEN ({margin}) > 0 THEN cnt ELSE 0 END"))
+        .cast("long")
+        .alias("n_correct"),
+        F.sum("cnt").cast("long").alias("n_rows"),
     )
     feat_case = (
         "CASE fid WHEN 0 THEN 'qty' WHEN 1 THEN 'price_c' ELSE 'disc_h' END"
     )
     rounds = None
     for u, st in enumerate(stumps, 1):
-        r = st.selectExpr(
+        r = spark.range(1).withColumns(st).selectExpr(
             f"{u} AS round",
             f"{feat_case} AS feature",
             "thr AS thr_bin",

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import materialize
+from ..session import materialize, one_row
 from ..sources.tables import load_table
 from .registry import query
 
@@ -548,8 +548,10 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     match).
 
     Scale: one data-scale hash aggregate; 3 × (two cell-grid
-    aggregates + joins), all calendar/type-bounded;
-    localCheckpoint per round keeps lineage flat.
+    aggregates + joins), all calendar/type-bounded. The two margin
+    targets live on the driver (``session.one_row``) and enter each
+    scaling step as typed literals; the cell grid is checkpointed
+    once per round to keep lineage flat.
     """
     ev = load_table(spark, sf_dir, "events")
     g = materialize(
@@ -562,7 +564,7 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("m"))
         .withColumn("w", F.lit(1.0))
     )
-    tgt = materialize(g.agg(
+    tgt = one_row(g.agg(
         (
             F.sum("m").cast("double") / F.countDistinct("event_type")
         ).alias("rt"),
@@ -574,12 +576,11 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         g = (
             g.join(rs, "event_type")
-            .crossJoin(F.broadcast(tgt))
             .select(
                 "event_type",
                 "dow",
                 "m",
-                (F.col("w") * F.col("rt") / F.col("s")).alias("w"),
+                (F.col("w") * tgt["rt"] / F.col("s")).alias("w"),
             )
         )
         cs = g.groupBy("dow").agg(
@@ -587,12 +588,11 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         g = materialize(
             g.join(cs, "dow")
-            .crossJoin(F.broadcast(tgt))
             .select(
                 "event_type",
                 "dow",
                 "m",
-                (F.col("w") * F.col("ct") / F.col("s")).alias("w"),
+                (F.col("w") * tgt["ct"] / F.col("s")).alias("w"),
             )
         )
     return g.selectExpr(*_IPF_FINAL).orderBy("event_type", "dow")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize
+from ..session import materialize, one_row
 from ..sources.tables import load_table
 from .registry import query
 
@@ -697,11 +697,12 @@ def _logreg_oracle() -> str:
 def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed logistic regression: 5 synchronous full-batch
     gradient-descent steps on 3 embedding features, predicting label
-    parity. The MLlib-style iterative pattern done collect-free: the
-    weight vector lives as a broadcast 1-row DataFrame, each step is
-    one map-side-combined aggregate over the (localCheckpoint'ed)
-    feature relation, and the chain stays lazy until the driver
-    collects the final 1-row result.
+    parity. The MLlib-style iterative pattern: the weight vector
+    lives on the driver (``session.one_row``) and ships into each step
+    as four typed literals; each step is one map-side-combined
+    aggregate over the checkpointed feature relation, the weight
+    update runs in that same job, and only the four new weights come
+    back to the driver.
 
     Float posture (deviation from this module's integer-sum rule,
     deliberate): the gradient sums O(1)-magnitude doubles whose
@@ -713,7 +714,8 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: per step, one scan of the cached feature relation + a
     4-double reduce — exactly MLlib's LogisticRegressionWithSGD cost
-    shape; the weight broadcast is O(features), never O(rows).
+    shape; the weights shipped with each step are O(features), never
+    O(rows).
     """
     emb = load_table(spark, sf_dir, "embeddings")
     d = materialize(emb.select(
@@ -722,11 +724,8 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding")[2].cast("double").alias("x3"),
         F.when(F.col("label") % 2 == 0, 0.0).otherwise(1.0).alias("y"),
     ))
-    cnt = d.agg(F.count("*").cast("double").alias("n"))
-
-    w = spark.createDataFrame(
-        [(0.0, 0.0, 0.0, 0.0)], "w0 double, w1 double, w2 double, w3 double"
-    )
+    n = one_row(d.agg(F.count("*").cast("double").alias("n")))["n"]
+    w = {c: F.lit(0.0) for c in ("w0", "w1", "w2", "w3")}
     z = (
         F.col("w0")
         + F.col("w1") * F.col("x1")
@@ -736,24 +735,19 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     resid = p - F.col("y")
     for _ in range(_LR_ITERS):
-        g = (
-            d.crossJoin(F.broadcast(w))
-            .crossJoin(F.broadcast(cnt))
+        w = one_row(
+            d.withColumns(w)
             .agg(
-                (F.sum(resid) / F.first("n")).alias("g0"),
-                (F.sum(resid * F.col("x1")) / F.first("n")).alias("g1"),
-                (F.sum(resid * F.col("x2")) / F.first("n")).alias("g2"),
-                (F.sum(resid * F.col("x3")) / F.first("n")).alias("g3"),
+                (F.sum(resid) / n).alias("g0"),
+                (F.sum(resid * F.col("x1")) / n).alias("g1"),
+                (F.sum(resid * F.col("x2")) / n).alias("g2"),
+                (F.sum(resid * F.col("x3")) / n).alias("g3"),
             )
-        )
-        # 1 row: keeps the lineage flat
-        w = materialize(
-            w.crossJoin(F.broadcast(g))
             .select(
-                (F.col("w0") - 1.0 * F.col("g0")).alias("w0"),
-                (F.col("w1") - 1.0 * F.col("g1")).alias("w1"),
-                (F.col("w2") - 1.0 * F.col("g2")).alias("w2"),
-                (F.col("w3") - 1.0 * F.col("g3")).alias("w3"),
+                (w["w0"] - 1.0 * F.col("g0")).alias("w0"),
+                (w["w1"] - 1.0 * F.col("g1")).alias("w1"),
+                (w["w2"] - 1.0 * F.col("g2")).alias("w2"),
+                (w["w3"] - 1.0 * F.col("g3")).alias("w3"),
             )
         )
     # Accuracy pass runs on the SAME 1e-4-rounded weights that the query
@@ -761,25 +755,22 @@ def q_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # last-ulp value can drift with partitioning, and a sigmoid landing
     # within ~1e-11 of 0.5 would then flip the exact-integer n_correct.
     # Rounding first makes n_correct a function of the protected outputs.
-    wr = w.select(*[F.round(c, 4).alias(c) for c in ("w0", "w1", "w2", "w3")])
-    acc = (
-        d.crossJoin(F.broadcast(wr))
-        .agg(
-            F.sum(
-                F.when(
-                    F.when(p >= 0.5, 1.0).otherwise(0.0) == F.col("y"), 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_correct"),
-            F.count("*").cast("long").alias("n_rows"),
+    wr = {c: F.round(v, 4) for c, v in w.items()}
+    acc = d.withColumns(wr).agg(
+        F.sum(
+            F.when(
+                F.when(p >= 0.5, 1.0).otherwise(0.0) == F.col("y"), 1
+            ).otherwise(0)
         )
+        .cast("long")
+        .alias("n_correct"),
+        F.count("*").cast("long").alias("n_rows"),
     )
-    return w.crossJoin(F.broadcast(acc)).select(
-        (F.round("w0", 4) + 0.0).alias("bias"),
-        (F.round("w1", 4) + 0.0).alias("c1"),
-        (F.round("w2", 4) + 0.0).alias("c2"),
-        (F.round("w3", 4) + 0.0).alias("c3"),
+    return acc.select(
+        (wr["w0"] + 0.0).alias("bias"),
+        (wr["w1"] + 0.0).alias("c1"),
+        (wr["w2"] + 0.0).alias("c2"),
+        (wr["w3"] + 0.0).alias("c3"),
         "n_correct",
         "n_rows",
     )
@@ -2856,8 +2847,10 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations — asserted by the cross-engine oracle match.
 
     Scale: one fact-scan histogram build (map-side combined), then 3
-    × (broadcast 1-row params → cell aggregate). The parameter
-    relation is localCheckpoint'ed per step to keep lineage flat.
+    × one cell aggregate. The totals and the five parameters live on
+    the driver (``session.one_row``): each step reads them as typed
+    literals, runs its M-step update in the same job as its sums, and
+    returns only the new parameters.
     """
     ev = load_table(spark, sf_dir, "events")
     h = materialize(
@@ -2866,7 +2859,7 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c")
         .agg(F.count("*").cast("long").alias("m"))
     )
-    tot = materialize(h.agg(
+    tot = one_row(h.agg(
         F.sum("m").cast("double").alias("nn"),
         F.sum(F.col("m").cast("decimal(38,0)") * F.col("c"))
         .cast("double")
@@ -2877,11 +2870,9 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("qq"),
     ))
-    params = spark.sql(_GMM_INIT)
+    params = one_row(spark.sql(_GMM_INIT))
     for _ in range(_GMM_ITERS):
-        cells = h.crossJoin(F.broadcast(params)).selectExpr(
-            "c", "m", f"{_GMM_R} AS r"
-        )
+        cells = h.withColumns(params).selectExpr("c", "m", f"{_GMM_R} AS r")
         sums = cells.agg(
             F.expr("SUM(CAST(m AS DOUBLE) * r)").alias("n1"),
             F.expr("SUM(CAST(m AS DOUBLE) * r * CAST(c AS DOUBLE))").alias(
@@ -2892,8 +2883,5 @@ def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * CAST(c AS DOUBLE))"
             ).alias("q1"),
         )
-        params = materialize(
-            sums.crossJoin(F.broadcast(tot))
-            .selectExpr(*_GMM_UPD)
-        )
-    return params.selectExpr(*_GMM_FINAL)
+        params = one_row(sums.withColumns(tot).selectExpr(*_GMM_UPD))
+    return spark.range(1).withColumns(params).selectExpr(*_GMM_FINAL)

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, NumericType, StringType
 
 
 def _default_parallelism() -> int:
@@ -123,6 +125,30 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def one_row(df: DataFrame) -> dict[str, Column]:
+    """Run ``df``, which must have exactly one row, and return its
+    values as literals keyed by column name: the home of an iteration's
+    O(features) state (weights, mixture parameters, a chosen stump).
+    The state then lives on the driver and each step ships it into its
+    aggregate as constants (``.withColumns(state)`` or a bare
+    ``Column``), instead of checkpointing a 1-row frame and
+    cross-joining it back in.
+
+    Each literal is cast to its column's type, so a BIGINT or
+    DECIMAL(38,0) value never comes back as the INT or DECIMAL(p, s)
+    that a bare ``F.lit`` would infer. Only numeric, boolean and string
+    columns are accepted; zero rows or more than one row raise.
+    """
+    fields = df.schema.fields
+    for f in fields:
+        if not isinstance(f.dataType, (NumericType, BooleanType, StringType)):
+            raise TypeError(f"one_row: column {f.name} is {f.dataType.simpleString()}")
+    rows = df.take(2)
+    if len(rows) != 1:
+        raise ValueError(f"one_row: expected exactly 1 row, got {len(rows)}")
+    return {f.name: F.lit(v).cast(f.dataType) for f, v in zip(fields, rows[0])}
+
+
 def release_checkpoints(spark: SparkSession) -> int:
     """Drop every RDD-level persisted block in the session — including
     the ``materialize`` blocks, which ``spark.catalog.clearCache()``
@@ -185,8 +211,6 @@ def warmup_expressions(spark: SparkSession, rows: int = 8_000) -> list[str]:
 
     Returns the list of warmed chain names (for logging/tests).
     """
-    from pyspark.sql import functions as F
-
     from .functions.text import tokens_col, word_shingles
 
     # ~12 pseudo-random tokens per row from a 97-word vocabulary:

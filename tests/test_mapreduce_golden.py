@@ -13,7 +13,13 @@ from pathlib import Path
 
 import pytest
 
-from .conftest import REPO, REF_TESTDATA, group_contract_model, needs_reference
+from .conftest import (
+    REF_TESTDATA,
+    REPO,
+    SF_SMOKE,
+    group_contract_model,
+    needs_reference,
+)
 
 INPUT = REF_TESTDATA / "input"
 EXEC = REF_TESTDATA / "exec"
@@ -272,8 +278,7 @@ def test_run_job_from_external_cwd(tmp_path):
 
     code = f"""
 import sys
-sys.path.insert(0, {str(REF_TESTDATA.parent.parent.parent / 'repo')!r})
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, {str(REPO)!r})
 import filecmp
 from pyspark.sql import SparkSession
 from mapreduce_server_development_spark.operators import run_job
@@ -323,7 +328,7 @@ def test_task_retry_on_mapper_failure(tmp_path):
     flaky.chmod(0o755)
     code = f"""
 import sys
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, {str(REPO)!r})
 import filecmp
 from pyspark.sql import SparkSession
 from mapreduce_server_development_spark.operators import run_job
@@ -564,3 +569,17 @@ print('AFTER_PYTHON_MAP', python_workers(jvm))
     assert out.get("JOB_OUTPUTS") == "2", res.stderr[-2000:]
     assert out["AFTER_JOB"] == "[]"
     assert out["AFTER_PYTHON_MAP"] != "[]"
+
+
+def test_pipe_wordcount_removes_its_temp_dir(spark, tmp_path, monkeypatch):
+    """q_pipe_wordcount dumps the documents and runs a job under a
+    temporary directory; once its result is built the directory is
+    gone, and the result still reads."""
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = entry.queries()["q_pipe_wordcount"](spark, SF_SMOKE).collect()
+    assert rows and all(r["cnt"] > 0 for r in rows)
+    assert not list(tmp_path.glob("pipe_wc_*"))

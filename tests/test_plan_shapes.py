@@ -839,10 +839,10 @@ def test_ipf_no_single_partition_window(spark):
 
 
 def test_gmm_em_runs_on_histogram_cells(spark):
-    """The returned frame reads the per-iteration localCheckpoint
-    (lineage deliberately flat — the iterations already ran), so the
-    visible plan is checkpoint-scan + readout: assert it stays that
-    way (no window, no product smuggled into the final projection)."""
+    """The iterations already ran on the driver-held parameters
+    (``session.one_row``), so the returned frame is a one-row readout
+    of literals: assert it stays that way (no window, no product
+    smuggled into the final projection)."""
     plan = _plan(spark, "q_gmm_em")
     assert "Window" not in plan
     assert "CartesianProduct" not in plan

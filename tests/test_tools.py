@@ -1,8 +1,9 @@
 """The measurement tools share the engine's session config and one
 measurement path: tools/ab.py (A/B arms, each in a fresh process) and
 tools/stress.py (disjoint-key replication of a fixture). The engine has
-one checkpoint producer, ``session.materialize``, and one release,
-``session.release_checkpoints``."""
+one checkpoint producer, ``session.materialize``, one release,
+``session.release_checkpoints``, and one reader of one-row iteration
+state into driver literals, ``session.one_row``."""
 
 from __future__ import annotations
 
@@ -59,6 +60,45 @@ def test_released_checkpoint_fails_loudly(spark):
     # it does not silently recompute.
     with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
         df.collect()
+
+
+def test_one_row_literals_keep_types_and_values(spark):
+    """Every value comes back as a literal of its column's exact type:
+    signed zero, subnormal, NaN, the int64 extremes, a 38-digit
+    decimal, a BIGINT small enough to pass for an INT, and a typed
+    NULL."""
+    from decimal import Decimal
+
+    from mapreduce_server_development_spark.session import one_row
+
+    df = spark.createDataFrame(
+        [(-0.0, 5e-324, float("nan"), 1 / 3, -(2**63), 2**40, 3, -7,
+          Decimal(10**37), True, "a'b\n☃", None)],
+        "neg_zero double, subnormal double, nan double, third double,"
+        " lo bigint, big bigint, small bigint, i int, dec decimal(38,0),"
+        " flag boolean, s string, nul bigint",
+    )
+    got = spark.range(1).withColumns(one_row(df)).drop("id")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in df.schema
+    ]
+    assert repr(got.collect()) == repr(df.collect())
+
+
+@pytest.mark.parametrize(
+    "sql, err",
+    [
+        ("SELECT 1 AS x WHERE false", "got 0"),
+        ("SELECT id AS x FROM range(2)", "got 2"),
+        ("SELECT array(1, 2) AS x", "array<int>"),
+        ("SELECT TIMESTAMP '2024-01-01 00:00:00' AS x", "timestamp"),
+    ],
+)
+def test_one_row_rejects(spark, sql, err):
+    from mapreduce_server_development_spark.session import one_row
+
+    with pytest.raises((TypeError, ValueError), match=err):
+        one_row(spark.sql(sql))
 
 
 def test_get_spark_applies_spark_confs(spark):
@@ -136,3 +176,15 @@ def test_ab_fails_when_digests_disagree(tmp_path, monkeypatch):
         ab.run_ab({"x": {}, "y": {}}, ["q"], "unused", "k", book=book)
     record = json.loads(book.read_text())["k"]
     assert record["earlier"] == 1 and record["entries"][0]["digest_mismatches"] == ["q"]
+
+
+def test_ab_prints_warm_median_of_runs_3_on(tmp_path, monkeypatch, capsys):
+    import ab
+
+    monkeypatch.setattr(ab, "run_arm", lambda *a: {
+        "session_s": 0.0, "rows": 1, "md5": "m",
+        "runs": [{"sec": s, "jobs": 1, "stages": 1, "tasks": 1, "spill_bytes": 0}
+                 for s in (9.0, 5.0, 2.0, 1.0, 3.0, 4.0)],
+    })
+    ab.run_ab({"x": {}}, ["q"], "unused", "k", book=tmp_path / "book.json")
+    assert "warm median 2.500s (runs 3..6)" in capsys.readouterr().out

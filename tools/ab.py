@@ -20,8 +20,10 @@ builds the query and runs its action inside the timer, under its own
 job group, and reads jobs, stages, tasks, executor time, GC, shuffle
 and spill for that group from the Spark status store
 (``perfbench.measure.read_stages``/``totals``). The first run is the
-cold run. After the timed runs the child collects the result once,
-outside the timer, and records the md5 of its canonical rows
+cold run; the printed warm median is over runs 3..N, because inside one
+JVM the second run and often the third are still JIT warm-up. After the
+timed runs the child collects the result once, outside the timer, and
+records the md5 of its canonical rows
 (``oracle_compare.canon_rows``). Arms whose digests disagree fail the
 experiment: no arm may change a result.
 
@@ -39,6 +41,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -206,7 +209,10 @@ def run_ab(arms: dict[str, dict], queries: list[str], sf_dir: str, key: str | No
                 print(f"{q} [{name}]: ERROR {rec['error']}", flush=True)
                 continue
             last = rec["runs"][-1]
-            print(f"{q} [{name}]: {[r['sec'] for r in rec['runs']]}s jobs {last['jobs']} "
+            secs = [r["sec"] for r in rec["runs"]]
+            warm = (f" warm median {statistics.median(secs[2:]):.3f}s (runs 3..{len(secs)})"
+                    if len(secs) > 2 else "")
+            print(f"{q} [{name}]: {secs}s{warm} jobs {last['jobs']} "
                   f"stages {last['stages']} tasks {last['tasks']} spill "
                   f"{last['spill_bytes']} rows {rec['rows']} md5 {rec['md5']} "
                   f"(session {rec['session_s']}s)", flush=True)
