@@ -84,6 +84,15 @@ def spark_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
         "spark.driver.maxResultSize": "2g",
+        # Generated-class cache (static; Spark's default is 100 entries,
+        # LRU). One pass of q_als_rank1 + q_hits + q_betweenness needs
+        # ~190 classes and the 390-query registry ~7,500, so at 100 warm
+        # queries evict each other's classes and recompile (janino) and
+        # re-JIT them. 10,000 holds the whole registry; after a full pass
+        # that costs ~60 MB more metaspace and ~90 MB more heap
+        # (SCALE.md). A constant: the working set is the registry's plan
+        # shapes, not the data's size.
+        "spark.sql.codegen.cache.maxEntries": "10000",
         # Local mode runs the whole engine in the driver JVM; the 1g
         # default heap GC-thrashes once ~32 shuffle tasks run hot.
         # Upper bound, not an allocation; on a cluster use

@@ -108,6 +108,29 @@ def test_get_spark_applies_spark_confs(spark):
     assert {k: conf.get(k) for k in spark_confs(8)} == spark_confs(8)
 
 
+def test_warm_queries_reuse_generated_classes(spark):
+    """Two iterative queries together need more generated classes than
+    Spark's default 100-entry cache holds (~140 at sf0.001), so there
+    every round evicts the other query's classes and recompiles them
+    all. With the cache sized to the working set, a warm round
+    compiles next to nothing."""
+    import __spark_entry__ as entrymod
+    from ab import compiles
+
+    from mapreduce_server_development_spark.session import release_checkpoints
+
+    qs = entrymod.queries()
+    rounds = []
+    for _ in range(3):
+        before = compiles(spark)
+        for name in ("q_hits", "q_betweenness"):
+            qs[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+            spark.catalog.clearCache()
+            release_checkpoints(spark)
+        rounds.append(compiles(spark) - before)
+    assert rounds[-1] <= 10, rounds
+
+
 @pytest.fixture(scope="module")
 def replicas(tmp_path_factory):
     if not Path(SF_SMOKE).exists():
@@ -159,6 +182,9 @@ def test_ab_arms_agree_on_result(tmp_path):
         assert all("error" not in r for r in recs), recs
         assert recs[0]["md5"] == recs[1]["md5"] and recs[0]["rows"] > 0
         assert recs[0]["runs"][0]["jobs"] > 0 and recs[0]["runs"][0]["tasks"] > 0
+        for r in recs:
+            assert all(type(run["compiles"]) is int and run["compiles"] >= 0
+                       for run in r["runs"]), r["runs"]
     assert json.loads(book.read_text())["overhead_ab"] == [entry]
 
 
@@ -168,7 +194,8 @@ def test_ab_fails_when_digests_disagree(tmp_path, monkeypatch):
     digests = iter(["aaa", "bbb"])
     monkeypatch.setattr(ab, "run_arm", lambda *a: {
         "session_s": 0.0, "rows": 1, "md5": next(digests),
-        "runs": [{"sec": 0.0, "jobs": 1, "stages": 1, "tasks": 1, "spill_bytes": 0}],
+        "runs": [{"sec": 0.0, "compiles": 0, "jobs": 1, "stages": 1, "tasks": 1,
+                  "spill_bytes": 0}],
     })
     book = tmp_path / "book.json"
     book.write_text(json.dumps({"k": {"earlier": 1}}))
@@ -183,8 +210,10 @@ def test_ab_prints_warm_median_of_runs_3_on(tmp_path, monkeypatch, capsys):
 
     monkeypatch.setattr(ab, "run_arm", lambda *a: {
         "session_s": 0.0, "rows": 1, "md5": "m",
-        "runs": [{"sec": s, "jobs": 1, "stages": 1, "tasks": 1, "spill_bytes": 0}
-                 for s in (9.0, 5.0, 2.0, 1.0, 3.0, 4.0)],
+        "runs": [{"sec": s, "compiles": c, "jobs": 1, "stages": 1, "tasks": 1,
+                  "spill_bytes": 0}
+                 for s, c in zip((9.0, 5.0, 2.0, 1.0, 3.0, 4.0), (50, 9, 0, 0, 0, 0))],
     })
     ab.run_ab({"x": {}}, ["q"], "unused", "k", book=tmp_path / "book.json")
-    assert "warm median 2.500s (runs 3..6)" in capsys.readouterr().out
+    assert ("warm median 2.500s (runs 3..6) compiles [50, 9, 0, 0, 0, 0]"
+            in capsys.readouterr().out)

@@ -19,13 +19,21 @@ The arms alternate per query. The child times ``runs`` runs; each
 builds the query and runs its action inside the timer, under its own
 job group, and reads jobs, stages, tasks, executor time, GC, shuffle
 and spill for that group from the Spark status store
-(``perfbench.measure.read_stages``/``totals``). The first run is the
+(``perfbench.measure.read_stages``/``totals``), and ``compiles``: how
+many classes Spark's codegen compiled during the run, i.e. how many
+generated-class cache misses it had. The first run is the
 cold run; the printed warm median is over runs 3..N, because inside one
 JVM the second run and often the third are still JIT warm-up. After the
 timed runs the child collects the result once, outside the timer, and
 records the md5 of its canonical rows
 (``oracle_compare.canon_rows``). Arms whose digests disagree fail the
 experiment: no arm may change a result.
+
+One query per child means an arm never sees another query's classes in
+its JVM: an A/B here cannot show pressure on the generated-class cache
+between queries (``spark.sql.codegen.cache.maxEntries``, SCALE.md). A
+warm run's ``compiles`` shows only what the query itself fails to reuse,
+such as literals that change from run to run.
 
 Usage:
     python tools/ab.py EXPERIMENT [--runs N] [query ...]
@@ -96,10 +104,18 @@ EXPERIMENTS: dict[str, tuple[dict[str, dict], list[str]]] = {
 }
 
 
+def compiles(spark) -> int:
+    """Classes compiled so far in this JVM: one per generated-class
+    cache miss (``CodegenMetrics`` counts every janino compile)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def measure(spark, name: str, build, action: str = "noop") -> dict:
     """Time one run of ``build()`` and its action under a fresh job
     group, then free its cached and checkpointed blocks (outside the
-    timer). Returns the wall time and the group's status-store totals."""
+    timer). Returns the wall time, the classes compiled and the group's
+    status-store totals."""
     from perfbench.measure import read_stages, totals
 
     from mapreduce_server_development_spark.session import release_checkpoints
@@ -108,6 +124,7 @@ def measure(spark, name: str, build, action: str = "noop") -> dict:
     group = f"ab.{name}.{time.monotonic_ns()}"
     sc.setJobGroup(group, name)
     try:
+        c0 = compiles(spark)
         t0 = time.perf_counter()
         df = build()
         if action == "foreach":
@@ -115,6 +132,7 @@ def measure(spark, name: str, build, action: str = "noop") -> dict:
         else:
             df.write.format("noop").mode("overwrite").save()
         sec = time.perf_counter() - t0
+        compiled = compiles(spark) - c0
     finally:
         sc._jsc.clearJobGroup()
         spark.catalog.clearCache()
@@ -122,7 +140,7 @@ def measure(spark, name: str, build, action: str = "noop") -> dict:
     jobs, stages = read_stages(spark, group)
     t = totals(stages)
     return {
-        "sec": round(sec, 3), "jobs": jobs,
+        "sec": round(sec, 3), "compiles": compiled, "jobs": jobs,
         **{k: t[k] for k in ("stages", "tasks", "spill_bytes", "shuffle_write_bytes",
                              "peak_exec_mem_bytes")},
         **{k: round(t[k], 3) for k in ("run_s", "gc_s")},
@@ -212,7 +230,8 @@ def run_ab(arms: dict[str, dict], queries: list[str], sf_dir: str, key: str | No
             secs = [r["sec"] for r in rec["runs"]]
             warm = (f" warm median {statistics.median(secs[2:]):.3f}s (runs 3..{len(secs)})"
                     if len(secs) > 2 else "")
-            print(f"{q} [{name}]: {secs}s{warm} jobs {last['jobs']} "
+            print(f"{q} [{name}]: {secs}s{warm} compiles "
+                  f"{[r['compiles'] for r in rec['runs']]} jobs {last['jobs']} "
                   f"stages {last['stages']} tasks {last['tasks']} spill "
                   f"{last['spill_bytes']} rows {rec['rows']} md5 {rec['md5']} "
                   f"(session {rec['session_s']}s)", flush=True)
